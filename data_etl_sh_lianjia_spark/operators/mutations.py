@@ -7,7 +7,8 @@ correction, re-crawl upsert). The engine implements them in
 :mod:`data_etl_sh_lianjia_spark.session`:
 
 - :func:`~.session.delete_where` — O(affected files + projection sizes):
-  unaffected part files hardlink into the new generation, SUM-mergeable
+  unaffected part files hardlink into the new generation; of the derived
+  artifacts that exist (each is built by its first read), SUM-mergeable
   projections absorb the removed rows as NEGATIVE deltas, ordered/vector
   artifacts rebuild, the bucketed fact copies rewrite only affected
   bucket files.
@@ -23,7 +24,8 @@ scratch-copies a table, ingests it, mutates it, and returns an aggregate
 the DuckDB oracle reproduces over the untouched source (``WHERE
 NOT(predicate)`` for deletes, ``CASE WHEN`` for updates, an anti-join +
 UNION for the merge) — the ``*_q1_projection`` variant additionally
-serves its aggregate from the delta-MERGED coarse rollup, so a driver
+reads the coarse rollup once before mutating (its first read builds it)
+and serves its aggregate from the delta-MERGED rollup, so a driver
 hash-match proves the merge bit-identical, not just the table rewrite.
 """
 
@@ -141,10 +143,14 @@ def delete_where_q1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_etl_sh_lianjia_spark.session import (
         aggproj_coarse_view,
         delete_where,
+        ingest_tables,
     )
 
     scratch = _scratch_copy(sf_dir, "lineitem")
     try:
+        # first read builds the rollup, so the mutation below must merge it
+        ingest_tables(spark, scratch)
+        aggproj_coarse_view(spark, scratch, "lineitem")
         delete_where(spark, scratch, "lineitem", pc.field("l_quantity") >= 45)
         ap2 = aggproj_coarse_view(spark, scratch, "lineitem")
         if ap2 is not None:
@@ -260,11 +266,15 @@ def update_where_q1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_etl_sh_lianjia_spark.session import (
         aggproj_coarse_view,
+        ingest_tables,
         update_where,
     )
 
     scratch = _scratch_copy(sf_dir, "lineitem")
     try:
+        # first read builds the rollup, so the mutation below must merge it
+        ingest_tables(spark, scratch)
+        aggproj_coarse_view(spark, scratch, "lineitem")
         update_where(
             spark, scratch, "lineitem",
             pc.field("l_quantity") >= 45,

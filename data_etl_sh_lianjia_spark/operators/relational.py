@@ -208,7 +208,9 @@ def q1_scan_agg_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q1_rawscan — compute-bound scan over the RAW landed lineitem (SURVEY.md §2.2)
 # ---------------------------------------------------------------------------
 
-# Per-row digest: 4 rounds of md5 over ~1 KB repeated blocks. Round count
+# Per-row digest: 1 seed md5 (over the key tuple repeated to ~0.8 KB) plus
+# _RAWSCAN_ROUNDS chained md5 calls (each over the previous hex digest
+# repeated to a 2 KB block) — see _md5_chain. Round count
 # and block size chosen by measurement (guide §1): a long chain of md5
 # over 32-byte strings is ALLOCATION-bound in the JVM (new digest + hex
 # string per call) and runs into the shared GC/memory-bandwidth wall — a

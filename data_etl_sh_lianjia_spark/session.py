@@ -201,9 +201,10 @@ _INGEST_LAYOUT = {
 # the shuffle it removes is exactly the term that diverged on the scale
 # curve (r5: 10x DuckDB at the 100x-replica point — the shuffle
 # materializes the whole fact per query while a co-located layout pays the
-# partitioning ONCE at ingest). Append batches bucket only the new rows and
-# hardlink-publish next to the existing bucket files (O(batch), bucket ids
-# ride the file-name suffix, multiple files per bucket stay one scan task);
+# partitioning ONCE, on its first read). Append batches bucket only the new
+# rows and hardlink-publish next to the existing bucket files (O(batch),
+# bucket ids ride the file-name suffix, multiple files per bucket stay one
+# scan task);
 # any non-append change invalidates by fingerprint and rebuilds. Storage
 # honestly doubles for these two facts: the primary copy stays
 # range-clustered on ship/order date (row-group pruning for the filter
@@ -215,7 +216,8 @@ _BUCKET_LAYOUT = {
 }
 
 
-# Key-dictionary (aggregate) projections maintained at ingest: for each
+# Key-dictionary (aggregate) projections (built on first read, then
+# maintained by every commit — see _ARTIFACTS): for each
 # declared fact-table column, the managed copy carries a sibling table
 # ``<table>.keydict.parquet`` with schema (col STRING, key BIGINT, cnt
 # BIGINT) — one row per distinct key value, with its row count. This is the
@@ -774,22 +776,15 @@ def _commit_settle(dst: str, timeout: float = 120.0) -> None:
     maintenance first, or a later rollback would restore over it."""
     import time
 
-    cdir = _commit_log_dir(dst)
-    marker = os.path.join(dst, "_SUCCESS")
     deadline = time.monotonic() + timeout
+    head = None
     while time.monotonic() < deadline:
-        seq, head = _commit_head(cdir)
-        if head is None:
+        # settled: .done landed, an unlogged publish (compact/restore)
+        # superseded the log, or the writer crashed (the lockstep check
+        # covers its wake)
+        if not _commit_inflight(dst):
             return
-        if os.path.exists(os.path.join(cdir, f"{seq:06d}.done")):
-            return
-        fp_now, _m = _read_marker(marker)
-        if head.get("fp_after") != fp_now and head.get("fp_before") != fp_now:
-            return  # unlogged publish (compact/restore) superseded the log
-        if head.get("pid") != os.getpid() and not _pid_alive(
-            int(head.get("pid", -1))
-        ):
-            return  # crashed writer: the lockstep check covers its wake
+        head = _commit_head(_commit_log_dir(dst))[1]
         time.sleep(0.02)
     raise ConcurrentWriteConflictError(
         f"commit {head.get('seq') if head else '?'} on {dst!r} never "
@@ -1212,6 +1207,8 @@ def _refresh_cut(spark: SparkSession, out_dir: str, spec: dict) -> str | None:
     import hashlib
 
     src_rel = _CUT_PARENTS[spec["parent_kind"]].format(parent=spec["parent"])
+    # a pin is an explicit request: its parent rollup is built if absent
+    _ensure_artifact(spark, out_dir, src_rel, maintain=True)
     src_path = os.path.join(out_dir, src_rel)
     p_fp, p_meta = _read_marker(os.path.join(src_path, "_SUCCESS"))
     if not p_fp:
@@ -2143,9 +2140,7 @@ def compact_table(
             comp = (jmeta or {}).get("components") or {}
             if comp.get(name) == old_fp:
                 comp = {**comp, name: new_fp}
-                jp_fp = (
-                    ";".join(f"{t}={comp[t]}" for t in sorted(comp)) + ":jp2"
-                )
+                jp_fp = _jp_fingerprint(comp)
                 tmpm = jp_marker + f".tmp-{os.getpid()}"
                 _write_marker(tmpm, jp_fp, {**jmeta, "components": comp})
                 os.replace(tmpm, jp_marker)
@@ -2180,6 +2175,9 @@ def _projection_view(
     and the artifact's _SUCCESS fingerprint matches the CURRENT state of
     every table it derives from, else None — callers fall back to their
     full-scan plan, so no projection is ever a correctness dependency.
+    A declared artifact (see _ARTIFACTS) that is absent or stale is built
+    here, on its first read, and then served; a raw landed dir (never
+    ingested) returns None and keeps the full-scan plan.
 
     The fingerprint check (not mere marker existence) closes a crash
     window: a re-ingest that rebuilt the table but died before rebuilding
@@ -2192,6 +2190,10 @@ def _projection_view(
     redirect = getattr(spark, "_lianjia_ingest_map", None) or {}
     out_dir = redirect.get(os.path.normpath(sf_dir))
     if out_dir is None:
+        return None
+    if artifact in _ARTIFACTS and not _ensure_artifact(
+        spark, out_dir, artifact
+    ):
         return None
     path = os.path.join(out_dir, artifact)
     art_fp, meta = _read_marker(os.path.join(path, "_SUCCESS"))
@@ -2309,9 +2311,10 @@ GROUP BY event_type
 }
 
 
-# Ingest-maintained RESULT projections: materialized relations built AT
-# INGEST by the exact kernels/SQL the serving queries run (each operator
-# module exposes its builders in a PROJECTION_BUILDERS dict), so a
+# RESULT projections: materialized relations built on their first read
+# (then maintained by every commit) by the exact kernels/SQL the serving
+# queries run (each operator module exposes its builders in a
+# PROJECTION_BUILDERS dict), so a
 # projection-served result is bit-identical by construction. Every
 # artifact carries the source table's fingerprint in its marker —
 # _projection_view refuses to serve it the moment the source changes, and
@@ -2348,7 +2351,7 @@ _RESULT_PROJECTIONS = {
     },
     # ANN index artifacts (VERDICT r9 #4): centroids/codebooks/signatures
     # and the corpus-sized inverted-file/code tables are maintained here —
-    # built at ingest by the same kernels the queries' inline fallbacks
+    # built on first read by the same kernels the queries' inline fallbacks
     # run, invalidated by the embeddings fingerprint, LOADED per query.
     # No mergers: centroid/codebook structures are frozen per build (the
     # production refresh-offline posture), so any collection change
@@ -2442,7 +2445,7 @@ _RESULT_PROJECTIONS = {
 
 
 # Ordered (top-k) projections: the exact top-N of a declared total order,
-# maintained at ingest and MERGED on appends (union existing top-N with the
+# built on first read and MERGED on appends (union existing top-N with the
 # batch's top-N, re-take N) — exact for any query LIMIT <= N because every
 # row ever in the global top-N is in some batch's top-N. The order must
 # include unique tiebreakers so the projection is deterministic. This is
@@ -2463,31 +2466,43 @@ _TOPK_PROJECTIONS = {
 }
 
 
+def _plain_order(order_sql: str) -> list[tuple[str, bool]] | None:
+    """[(column, descending)] when every comma term of ``order_sql`` is a
+    plain ``<identifier> [ASC|DESC]``, else None — the driver-side order
+    readers then defer to Spark, which evaluates any expression term."""
+    import re
+
+    out = []
+    for part in order_sql.split(","):
+        m = re.fullmatch(
+            r"\s*([A-Za-z_][A-Za-z0-9_]*)(?:\s+(ASC|DESC))?\s*", part, re.I
+        )
+        if m is None:
+            return None
+        out.append((m.group(1), (m.group(2) or "").upper() == "DESC"))
+    return out
+
+
 def _topkproj_local(spec: dict, files: list[str], merge_with: str | None):
     """Driver-side twin of the ordered-projection build/merge: sort the
     (source ∪ existing-projection) rows by the declared total order, take
-    N. Returns None when ineligible — NULLs in any order column (Spark's
-    ASC NULLS FIRST vs pyarrow's at_end placement would disagree) or a
-    schema mismatch — and the Spark path stands. The order carries unique
-    tiebreakers by contract, so sort stability is irrelevant and the
-    result is the exact TakeOrderedAndProject output."""
+    N. Returns None when ineligible — an order term that is not a plain
+    ``<column> [ASC|DESC]`` (an expression, NULLS FIRST/LAST), NULLs in
+    any order column (Spark's ASC NULLS FIRST vs pyarrow's at_end
+    placement would disagree) or a schema mismatch — and the Spark path
+    stands. The order carries unique tiebreakers by contract, so sort
+    stability is irrelevant and the result is the exact
+    TakeOrderedAndProject output."""
     import glob
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     cols = list(spec["cols"])
-    order = []
-    for part in spec["order_sql"].split(","):
-        toks = part.split()
-        order.append(
-            (
-                toks[0],
-                "descending"
-                if len(toks) > 1 and toks[1].upper() == "DESC"
-                else "ascending",
-            )
-        )
+    terms = _plain_order(spec["order_sql"])
+    if terms is None or any(c not in cols for c, _d in terms):
+        return None
+    order = [(c, "descending" if d else "ascending") for c, d in terms]
     tabs = [pq.read_table(p, columns=cols) for p in files]
     if merge_with is not None:
         tabs += [
@@ -2566,8 +2581,9 @@ def _topk_unaffected(tp_dst: str, spec: dict, candidate_paths) -> bool:
     order — a non-member's removal, and an insertion that doesn't beat the
     boundary, leave the top-n bit-identical, so the artifact restamps
     instead of rebuilding (a full-scan job saved per point mutation).
-    Conservative on every edge: not-full projection, NULL order values, or
-    a tie with the boundary all return False (rebuild)."""
+    Conservative on every edge: an expression order term, a not-full
+    projection, NULL order values, or a tie with the boundary all return
+    False (rebuild)."""
     import glob as _glob
 
     import pyarrow as pa
@@ -2576,13 +2592,12 @@ def _topk_unaffected(tp_dst: str, spec: dict, candidate_paths) -> bool:
     files = sorted(_glob.glob(os.path.join(tp_dst, "*.parquet")))
     if not files:
         return False
+    order = _plain_order(spec["order_sql"])
+    if order is None:
+        return False
     cur = pa.concat_tables(pq.read_table(f) for f in files)
     if cur.num_rows < spec["n"]:
         return False
-    order = []
-    for part in spec["order_sql"].split(","):
-        toks = part.strip().split()
-        order.append((toks[0], len(toks) > 1 and toks[-1].upper() == "DESC"))
     ocols = [c for c, _ in order]
 
     def sorts_after(a: dict, b: dict) -> bool:
@@ -2633,7 +2648,7 @@ def topkproj_view(spark: SparkSession, sf_dir: str, name: str) -> str | None:
 # 100 TB. Maintenance:
 #   - any change to a dimension/orders source -> full rebuild (dims are
 #     orders of magnitude smaller than the fact; rebuild cost is one run
-#     of the join at ingest time);
+#     of the join);
 #   - an append-only change to the FACT alone -> classic insert-only IVM:
 #     join ONLY the new fact rows against the (unchanged) other sources,
 #     then UNION ALL + re-SUM with the existing rollup — exactly correct
@@ -2962,15 +2977,20 @@ def _maintain_coarse_joinproj(
     jp_fp: str,
     jp_meta: dict,
     restamp_from: str | None = None,
+    build: bool = False,
 ) -> None:
     """Bring the coarse derivation of a star rollup into lockstep with
-    the fine rollup's fingerprint: a no-op when already fresh; a pure
-    marker restamp when the fine rollup's CONTENT is provably unchanged
-    (``restamp_from`` = the fine rollup's pre-restamp fingerprint, and
-    the coarse artifact was in lockstep with it); otherwise a re-derive —
-    one tiny Spark job over the KB-sized fine rollup, never the fact."""
+    the fine rollup's fingerprint: a no-op when already fresh or when the
+    cut was never published (unless ``build``, the first-read path); a
+    pure marker restamp when the fine rollup's CONTENT is provably
+    unchanged (``restamp_from`` = the fine rollup's pre-restamp
+    fingerprint, and the coarse artifact was in lockstep with it);
+    otherwise a re-derive — one tiny Spark job over the KB-sized fine
+    rollup, never the fact."""
     c = spec.get("coarse")
-    if not c:
+    if not c or not (
+        build or _artifact_present(out_dir, _coarse_jp_dst("", jp_name, spec))
+    ):
         return
     _derive_cut(
         spark, c["derive_sql"], jp_dst,
@@ -3243,11 +3263,12 @@ def _delete_bucketed(
 
 
 def bucketed_table(spark: SparkSession, sf_dir: str, name: str) -> str | None:
-    """Registered catalog-table name of the ingest-maintained bucketed copy
-    of fact ``name``, or None when this session has no fresh copy for
-    ``sf_dir`` — callers fall back to their shuffled join plan, so the
-    bucketed copy is never a correctness dependency (the driver gate runs
-    on raw landed files and always exercises the fallback).
+    """Registered catalog-table name of the bucketed copy of fact
+    ``name`` (built on its first read, then maintained by every commit),
+    or None when this session did not ingest ``sf_dir`` — callers fall
+    back to their shuffled join plan, so the bucketed copy is never a
+    correctness dependency (the driver gate runs on raw landed files and
+    always exercises the fallback).
 
     Spark only honors bucketing metadata through the catalog, so serving
     re-registers the artifact as an external bucketed table (pure DDL over
@@ -3259,7 +3280,9 @@ def bucketed_table(spark: SparkSession, sf_dir: str, name: str) -> str | None:
         return None
     redirect = getattr(spark, "_lianjia_ingest_map", None) or {}
     out_dir = redirect.get(os.path.normpath(sf_dir))
-    if out_dir is None:
+    if out_dir is None or not _ensure_artifact(
+        spark, out_dir, f"{name}.bucketed.parquet"
+    ):
         return None
     path = os.path.join(out_dir, f"{name}.bucketed.parquet")
     art_fp, meta = _read_marker(os.path.join(path, "_SUCCESS"))
@@ -3366,23 +3389,21 @@ def _aggproj_local_events(table):
     """Driver-side rollup of an events delta batch: read_events' ts_ns
     normalization + the shred-derived props_k + the events measures, in
     pyarrow (bit-parity pinned by test)."""
-    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     table = _shred_json_columns(table)
     ts = table.column("ts")
-    if pa.types.is_timestamp(ts.type):
+    # the same three storage forms read_events distinguishes
+    if "ts_ns" in table.column_names and not pa.types.is_integer(ts.type):
+        # normalized storage: the stored exact nanos win over ts
+        ns = pc.cast(table.column("ts_ns"), pa.int64())
+    elif pa.types.is_integer(ts.type):
+        # a BIGINT ts IS epoch-nanos (read_events renames it to ts_ns)
+        ns = pc.cast(ts, pa.int64())
+    else:
         ns = pc.multiply(
             pc.cast(pc.cast(ts, pa.timestamp("us")), pa.int64()), 1000
-        )
-    else:
-        # raw INT64 column: read_events normalizes by magnitude — values
-        # at or above 1e17 are already epoch-nanos, below are micros
-        v = pc.cast(ts, pa.int64()).to_numpy(zero_copy_only=False)
-        ns = pa.array(
-            np.where(np.abs(v) >= 100000000000000000, v, v * 1000),
-            pa.int64(),
         )
     keys = ("event_type", "ts_day")
     t = pa.table(
@@ -3565,7 +3586,15 @@ def _build_aggproj(
     transform is a bit-pinned IEEE/integer twin of the SQL expressions
     (tests/test_ingest.py::test_aggproj_local_twin_parity), and ANY
     failure or ineligibility falls back to this Spark path (which also
-    remains the 100 TB regime — the threshold gates on source bytes)."""
+    remains the 100 TB regime — the threshold gates on source bytes).
+
+    Every delta-merge counts in ``spark._lianjia_aggproj_merges`` (a
+    session-lifetime total), so a caller can prove a commit merged the
+    rollup instead of rebuilding it."""
+    if merge_with is not None:
+        spark._lianjia_aggproj_merges = (
+            getattr(spark, "_lianjia_aggproj_merges", 0) + 1
+        )
     if spec.get("local_build") is not None:
         files, local_bytes = _expand_local_paths(src_paths)
         if files and local_bytes < LOCAL_INGEST_MAX_BYTES:
@@ -5285,26 +5314,33 @@ def delete_where(
 
     ``predicate`` is a pyarrow dataset expression (e.g.
     ``pc.field("o_orderstatus") == "F"``), evaluated with SQL DELETE
-    semantics (NULL-predicate rows survive). Maintenance per artifact:
+    semantics (NULL-predicate rows survive). Derived artifacts are built
+    on first read, so only those that EXIST are maintained — an artifact
+    no reader requested is neither built nor merged here. Maintenance per
+    artifact:
 
     - **managed table**: part files with no match (stats-pruned check)
       hardlink into the new generation byte-untouched; only files with
       matches rewrite (minus their matched rows). A predicate on the
       range-cluster key touches O(matching files) by min/max pruning.
-    - **bucketed fact copies**: same per-file split over the bucket files
-      — O(affected buckets); file names (bucket suffix + append tags)
-      are preserved so bucket placement and later whole-batch deletes
-      keep working. Emptied bucket files stay as 0-row parquet.
+    - **bucketed fact copies**, when present: same per-file split over the
+      bucket files — O(affected buckets); file names (bucket suffix +
+      append tags) are preserved so bucket placement and later
+      whole-batch deletes keep working. Emptied bucket files stay as
+      0-row parquet.
     - **SUM-mergeable projections** (keydict/colstats, aggregate rollups,
-      star rollups): NEGATIVE merges from exactly the removed rows —
-      integer partial sums subtract as exactly as they add, so the merged
-      projection is bit-identical to a from-scratch rebuild (pinned by the
-      predicate-delete test suite). Star rollups delete-IVM via the same
-      path the whole-batch delete uses.
+      star rollups), when present: NEGATIVE merges from exactly the
+      removed rows — integer partial sums subtract as exactly as they
+      add, so the merged projection is bit-identical to a from-scratch
+      rebuild (pinned by the predicate-delete test suite). Star rollups
+      delete-IVM via the same path the whole-batch delete uses.
     - **ordered/vector artifacts** (top-k projection, cosine pairs, k-NN
-      graph): rebuilt — a removed top row needs a replacement no merge can
-      produce. The sessions artifact re-sessionizes only affected users
-      and rewrites only their buckets (delete-valid merger).
+      graph), when present: rebuilt — a removed top row needs a
+      replacement no merge can produce. The sessions artifact
+      re-sessionizes only affected users and rewrites only their buckets
+      (delete-valid merger).
+    - any present artifact out of lockstep with the pre-delete table
+      state is rebuilt from the post-delete copy.
 
     Persistence: the table's marker fingerprint gains a ``~del<h>``
     segment (h = md5 of the prior fingerprint + the predicate string), and
@@ -5504,7 +5540,17 @@ def delete_where(
     _publish_dir(dst, new_fp, old_meta, _write_generation)
 
     held_paths = sorted(glob.glob(os.path.join(hold, "*.parquet")))
-    if kd_cols:
+
+    # Maintenance touches only PRESENT artifacts: those in lockstep with
+    # the pre-delete state merge or restamp here; any other present one
+    # rebuilds from the post-delete copy (_refresh_present); absent ones
+    # stay absent until a reader builds them.
+    def _lockstep(rel: str) -> bool:
+        return _marker_fresh(os.path.join(out_dir, rel, "_SUCCESS"), old_fp)
+
+    if kd_cols and _lockstep(f"{name}.keydict.parquet") and _lockstep(
+        f"{name}.colstats.parquet"
+    ):
         # distributed regime: the split tasks already counted the deltas
         # (kd_counts); local regime: per-file, dictionary-columns-only
         # counting — driver memory stays one file's key columns either way
@@ -5514,17 +5560,12 @@ def delete_where(
             precomputed=kd_counts,
         )
     ap_spec = _AGG_PROJECTIONS.get(name)
-    if ap_spec:
+    if ap_spec and _lockstep(f"{name}.aggproj.parquet"):
         ap_dst = os.path.join(out_dir, f"{name}.aggproj.parquet")
         _build_aggproj(
             spark, ap_spec, held_paths, ap_dst, new_fp, old_meta,
             merge_with=ap_dst, negate=True,
         )
-        if "coarse" in ap_spec:
-            _build_coarse_aggproj(
-                spark, ap_spec, ap_dst, _coarse_dst(out_dir, name, ap_spec),
-                new_fp, old_meta,
-            )
     tp_spec = _TOPK_PROJECTIONS.get(name)
     if tp_spec:
         tp_dst = os.path.join(
@@ -5533,63 +5574,44 @@ def delete_where(
         # membership-pruned maintenance: removing rows that provably sort
         # after the current boundary cannot change the top-n — restamp
         # instead of paying a full-scan rebuild per point delete
-        if _read_marker(os.path.join(tp_dst, "_SUCCESS"))[
-            0
-        ] == old_fp and _topk_unaffected(tp_dst, tp_spec, held_paths):
+        if _lockstep(os.path.basename(tp_dst)) and _topk_unaffected(
+            tp_dst, tp_spec, held_paths
+        ):
             _restamp_marker(tp_dst, old_fp, new_fp)
-        else:
-            _build_topkproj(spark, tp_spec, [dst], tp_dst, new_fp, old_meta)
-    bk_col = _BUCKET_LAYOUT.get(name)
-    if bk_col:
-        bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
-        bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
-        nb = bk_meta.get("n_buckets")
-        if nb and bk_have == f"{old_fp}:bk{nb}":
-            # targeted rewrite: only bucket files with matches rewrite
-            # (names preserved — bucket ids ride the _NNNNN suffix and
-            # append tags the a<tag>- prefix); the rest hardlink
-            def _write_buckets(tmp: str) -> None:
-                from concurrent.futures import ThreadPoolExecutor
+    bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
+    bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
+    nb = bk_meta.get("n_buckets")
+    if _BUCKET_LAYOUT.get(name) and nb and bk_have == f"{old_fp}:bk{nb}":
+        # targeted rewrite: only bucket files with matches rewrite
+        # (names preserved — bucket ids ride the _NNNNN suffix and
+        # append tags the a<tag>- prefix); the rest hardlink
+        def _write_buckets(tmp: str) -> None:
+            entries = [
+                e
+                for e in os.scandir(bk_dst)
+                if e.is_file() and e.name.endswith(".parquet")
+            ]
 
-                entries = [
-                    e
-                    for e in os.scandir(bk_dst)
-                    if e.is_file() and e.name.endswith(".parquet")
-                ]
+            def _one(entry) -> None:
+                b_matched, b_rest = _split_file_by_predicate(
+                    entry.path, predicate
+                )
+                if b_matched is None:
+                    os.link(entry.path, os.path.join(tmp, entry.name))
+                else:
+                    pq.write_table(b_rest, os.path.join(tmp, entry.name))
 
-                def _one(entry) -> None:
-                    b_matched, b_rest = _split_file_by_predicate(
-                        entry.path, predicate
-                    )
-                    if b_matched is None:
-                        os.link(entry.path, os.path.join(tmp, entry.name))
-                    else:
-                        pq.write_table(b_rest, os.path.join(tmp, entry.name))
+            with ThreadPoolExecutor(
+                max_workers=min(8, max(1, len(entries)))
+            ) as bpool:
+                list(bpool.map(_one, entries))
 
-                with ThreadPoolExecutor(
-                    max_workers=min(8, max(1, len(entries)))
-                ) as bpool:
-                    list(bpool.map(_one, entries))
-
-            _publish_dir(bk_dst, f"{new_fp}:bk{nb}", bk_meta, _write_buckets)
-        else:
-            cpus = int(
-                os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
-            )
-            nb = max(8, cpus)
-            _build_bucketed(
-                spark, dst, bk_dst, bk_col, nb, f"{new_fp}:bk{nb}",
-                {"bucket_col": bk_col, "n_buckets": nb},
-            )
+        _publish_dir(bk_dst, f"{new_fp}:bk{nb}", bk_meta, _write_buckets)
+    _refresh_present(spark, out_dir, name)
 
     # star rollups + result projections: same maintainers the ingest delta
     # paths use, with the removed rows as the delete delta
-    tbl_state: dict[str, dict] = {}
-    for t in TABLES:
-        t_dst = os.path.join(out_dir, f"{t}.parquet")
-        fp, _tm = _read_marker(os.path.join(t_dst, "_SUCCESS"))
-        if fp:
-            tbl_state[t] = {"fp": fp, "src": t_dst, "delta": None}
+    tbl_state = _tables_state(out_dir)
     tbl_state[name]["prev_fp"] = old_fp
     tbl_state[name]["removed_paths"] = held_paths
     spark._lianjia_joinproj_ivm = _maintain_join_projections(
@@ -5688,7 +5710,9 @@ def update_where(
     ``predicate`` is a pyarrow dataset expression with SQL UPDATE
     semantics (NULL-predicate rows are untouched); ``assignments`` is the
     SET clause (see :func:`_apply_assignments`), evaluated against the OLD
-    row values, so ``SET x = x + 1`` works. Maintenance per artifact:
+    row values, so ``SET x = x + 1`` works. As in :func:`delete_where`,
+    only artifacts that exist are maintained (any out of lockstep
+    rebuild). Maintenance per artifact:
 
     - **managed table**: part files with no match (stats-pruned check)
       hardlink into the new generation byte-untouched; files with matches
@@ -5704,7 +5728,8 @@ def update_where(
       keys. The keydict absorbs both sides in a single publish; rollups
       publish the intermediate negative merge under ``<fp>:neg`` (never
       serveable — it matches no table state) so a crash between the two
-      merges is refused by lockstep and rebuilt on the next ingest.
+      merges is refused by lockstep and rebuilt by its next read or
+      commit.
     - **bucketed fact copies**: per-file split+rewrite of only the bucket
       files with matches — unless the UPDATE touches the bucket key
       itself, which moves rows across buckets and rebuilds.
@@ -5935,19 +5960,26 @@ def update_where(
     held_old = sorted(glob.glob(os.path.join(hold_old, "*.parquet")))
     held_new = sorted(glob.glob(os.path.join(hold_new, "*.parquet")))
     table_cols = set(pq.read_schema(held_old[0]).names)
-    if kd_cols:
-        kd_dst = os.path.join(out_dir, f"{name}.keydict.parquet")
-        cs_dst = os.path.join(out_dir, f"{name}.colstats.parquet")
-        if upd_cols.isdisjoint(kd_cols):
-            # no dictionary column changed value: counts are untouched
-            _restamp_marker(kd_dst, old_fp, new_fp)
-            _restamp_marker(cs_dst, old_fp, new_fp)
-        else:
-            _keydict_negative_merge(
-                kd_dst, held_old, kd_cols, new_fp, old_meta,
-                add_batch=held_new,
-                precomputed=kd_counts,
-            )
+
+    # Present artifacts only, as in delete_where: lockstep ones restamp
+    # or merge here, other present ones rebuild in _refresh_present.
+    def _lockstep(rel: str) -> bool:
+        return _marker_fresh(os.path.join(out_dir, rel, "_SUCCESS"), old_fp)
+
+    kd_dst = os.path.join(out_dir, f"{name}.keydict.parquet")
+    cs_dst = os.path.join(out_dir, f"{name}.colstats.parquet")
+    if kd_cols and upd_cols.isdisjoint(kd_cols):
+        # no dictionary column changed value: counts are untouched
+        _restamp_marker(kd_dst, old_fp, new_fp)
+        _restamp_marker(cs_dst, old_fp, new_fp)
+    elif kd_cols and _lockstep(f"{name}.keydict.parquet") and _lockstep(
+        f"{name}.colstats.parquet"
+    ):
+        _keydict_negative_merge(
+            kd_dst, held_old, kd_cols, new_fp, old_meta,
+            add_batch=held_new,
+            precomputed=kd_counts,
+        )
     ap_spec = _AGG_PROJECTIONS.get(name)
     if ap_spec:
         ap_dst = os.path.join(out_dir, f"{name}.aggproj.parquet")
@@ -5968,12 +6000,12 @@ def update_where(
                 _restamp_marker(
                     _coarse_dst(out_dir, name, ap_spec), old_fp, new_fp
                 )
-        else:
+        elif _lockstep(f"{name}.aggproj.parquet"):
             # two-step IVM: negative merge publishes under an intermediate
             # fingerprint no reader accepts, then the positive merge lands
             # the final one — a crash in between leaves the rollup refused
-            # by lockstep and rebuilt on the next ingest, never served
-            # half-merged
+            # by lockstep and rebuilt by its next read or commit, never
+            # served half-merged
             _build_aggproj(
                 spark, ap_spec, held_old, ap_dst, f"{new_fp}:neg", old_meta,
                 merge_with=ap_dst, negate=True,
@@ -5982,11 +6014,6 @@ def update_where(
                 spark, ap_spec, held_new, ap_dst, new_fp, old_meta,
                 merge_with=ap_dst,
             )
-            if "coarse" in ap_spec:
-                _build_coarse_aggproj(
-                    spark, ap_spec, ap_dst,
-                    _coarse_dst(out_dir, name, ap_spec), new_fp, old_meta,
-                )
     tp_spec = _TOPK_PROJECTIONS.get(name)
     if tp_spec:
         tp_dst = os.path.join(
@@ -5998,85 +6025,68 @@ def update_where(
         tp_cols = set(tp_spec["cols"]) | _referenced_cols(
             tp_spec["order_sql"], table_cols
         )
-        tp_lockstep = (
-            _read_marker(os.path.join(tp_dst, "_SUCCESS"))[0] == old_fp
-        )
-        if tp_lockstep and (
+        if _lockstep(os.path.basename(tp_dst)) and (
             upd_cols.isdisjoint(tp_cols)
             or _topk_unaffected(tp_dst, tp_spec, held_old + held_new)
         ):
             _restamp_marker(tp_dst, old_fp, new_fp)
-        else:
-            _build_topkproj(spark, tp_spec, [dst], tp_dst, new_fp, old_meta)
     bk_col = _BUCKET_LAYOUT.get(name)
-    if bk_col:
-        bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
-        bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
-        nb = bk_meta.get("n_buckets")
-        if (
-            nb
-            and bk_have == f"{old_fp}:bk{nb}"
-            # gate on the DERIVED update set, not the raw assignments: a
-            # shred re-derivation (events.props -> props_k) counts as
-            # touching that column, and if the bucket key were ever a
-            # derived column the targeted path must not hold it still
-            and bk_col not in upd_cols
-        ):
-            # targeted rewrite: the bucket key is untouched, so updated
-            # rows stay in their bucket — only files with matches rewrite
-            def _write_buckets(tmp: str) -> None:
-                entries = [
-                    e
-                    for e in os.scandir(bk_dst)
-                    if e.is_file() and e.name.endswith(".parquet")
-                ]
+    bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
+    bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
+    nb = bk_meta.get("n_buckets")
+    if (
+        bk_col
+        and nb
+        and bk_have == f"{old_fp}:bk{nb}"
+        # gate on the DERIVED update set, not the raw assignments: a
+        # shred re-derivation (events.props -> props_k) counts as
+        # touching that column, and if the bucket key were ever a
+        # derived column the targeted path must not hold it still
+        and bk_col not in upd_cols
+    ):
+        # targeted rewrite: the bucket key is untouched, so updated
+        # rows stay in their bucket — only files with matches rewrite
+        # (a bucket-key update moves rows across buckets: rebuilt by
+        # _refresh_present)
+        def _write_buckets(tmp: str) -> None:
+            entries = [
+                e
+                for e in os.scandir(bk_dst)
+                if e.is_file() and e.name.endswith(".parquet")
+            ]
 
-                def _one(entry) -> None:
-                    b_matched, b_rest = _split_file_by_predicate(
-                        entry.path, predicate
+            def _one(entry) -> None:
+                b_matched, b_rest = _split_file_by_predicate(
+                    entry.path, predicate
+                )
+                if b_matched is None:
+                    os.link(entry.path, os.path.join(tmp, entry.name))
+                else:
+                    # _apply_update, not _apply_assignments: the
+                    # bucketed copy must re-derive shredded columns
+                    # exactly like the main table's rewrite did, or a
+                    # bucketed table with a JSON shred would publish a
+                    # copy whose shred diverges under a fresh
+                    # fingerprint
+                    pq.write_table(
+                        pa.concat_tables(
+                            [b_rest, _apply_update(b_matched, assignments)]
+                        ),
+                        os.path.join(tmp, entry.name),
                     )
-                    if b_matched is None:
-                        os.link(entry.path, os.path.join(tmp, entry.name))
-                    else:
-                        # _apply_update, not _apply_assignments: the
-                        # bucketed copy must re-derive shredded columns
-                        # exactly like the main table's rewrite did, or a
-                        # bucketed table with a JSON shred would publish a
-                        # copy whose shred diverges under a fresh
-                        # fingerprint
-                        pq.write_table(
-                            pa.concat_tables(
-                                [b_rest, _apply_update(b_matched, assignments)]
-                            ),
-                            os.path.join(tmp, entry.name),
-                        )
 
-                with ThreadPoolExecutor(
-                    max_workers=min(8, max(1, len(entries)))
-                ) as bpool:
-                    list(bpool.map(_one, entries))
+            with ThreadPoolExecutor(
+                max_workers=min(8, max(1, len(entries)))
+            ) as bpool:
+                list(bpool.map(_one, entries))
 
-            _publish_dir(bk_dst, f"{new_fp}:bk{nb}", bk_meta, _write_buckets)
-        else:
-            # bucket-key update moves rows across buckets: rebuild
-            cpus = int(
-                os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
-            )
-            nb = max(8, cpus)
-            _build_bucketed(
-                spark, dst, bk_dst, bk_col, nb, f"{new_fp}:bk{nb}",
-                {"bucket_col": bk_col, "n_buckets": nb},
-            )
+        _publish_dir(bk_dst, f"{new_fp}:bk{nb}", bk_meta, _write_buckets)
+    _refresh_present(spark, out_dir, name)
 
     # star rollups + result projections: update deltas are (old rows,
     # new rows) pairs — the maintainers negative+positive merge or
     # delegate to update-capable mergers (see their docstrings)
-    tbl_state: dict[str, dict] = {}
-    for t in TABLES:
-        t_dst = os.path.join(out_dir, f"{t}.parquet")
-        fp, _tm = _read_marker(os.path.join(t_dst, "_SUCCESS"))
-        if fp:
-            tbl_state[t] = {"fp": fp, "src": t_dst, "delta": None}
+    tbl_state = _tables_state(out_dir)
     tbl_state[name]["prev_fp"] = old_fp
     tbl_state[name]["updated_old_paths"] = held_old
     tbl_state[name]["updated_new_paths"] = held_new
@@ -6243,7 +6253,7 @@ def merge_into(
             tmp_tomb, os.path.join(src, f"_merge-{tag}.tombstones.json")
         )
     # re-ingest under the recorded layout: the append-only delta path
-    # lands the batch and positive-merges every projection
+    # lands the batch and positive-merges every present projection
     _mutation_target(spark, sf_dir, name)
     return n_replaced, batch.num_rows
 
@@ -6264,13 +6274,24 @@ def ingest_tables(
     only the physical layout changes, so every declared query returns the
     same result either way (the correctness gate runs on the raw files).
 
+    Ingest publishes TABLE COPIES only. Every derived artifact (keydict/
+    colstats, aggregate and star rollups with their cuts, the top-k
+    projection, the bucketed fact copies, the result and vector
+    projections — see _ARTIFACTS) is built on its first read through its
+    ``*_view`` / ``bucketed_table`` and maintained from then on: each
+    later call merges or rebuilds only the artifacts that exist, so an
+    artifact no reader requested costs nothing here.
+
     Directory-form sources additionally get APPEND-ONLY DELTA ingest: when
     the source merely gained part files since the manifest recorded in the
-    managed copy's marker, only the new batch is ingested and the keydict
-    projection merges (union keys, sum cnt) instead of rebuilding — the
-    maintenance cost of an append is O(batch + dictionary), never
-    O(history). Any non-additive change (part rewritten or removed, layout
-    knobs changed) falls back to the full rebuild.
+    managed copy's marker, only the new batch is ingested and each present
+    artifact in lockstep with the pre-append state merges (keydict: union
+    keys, sum cnt; rollups: UNION ALL + re-SUM) instead of rebuilding —
+    the maintenance cost of an append is O(batch + artifact), never
+    O(history). A present artifact out of lockstep rebuilds. Any
+    non-additive change (part rewritten or removed, layout knobs changed)
+    falls back to the full table rebuild, after which present artifacts
+    rebuild too.
     """
     import hashlib
 
@@ -6332,6 +6353,12 @@ def ingest_tables(
         if manifest is not None:
             meta["parts"] = manifest
         tbl_state[name] = {"fp": fingerprint, "src": src, "delta": None}
+        table_marker = os.path.join(dst, "_SUCCESS")
+        if _marker_fresh(table_marker, fingerprint):
+            # artifacts are built on first read; one that exists but went
+            # stale (a crash mid-maintenance, a restore) rebuilds here
+            _refresh_present(spark, out_dir, name)
+            continue
         kd_cols = _DICT_LAYOUT.get(name)
         kd_dst = os.path.join(out_dir, f"{name}.keydict.parquet")
         cs_dst = os.path.join(out_dir, f"{name}.colstats.parquet")
@@ -6341,275 +6368,169 @@ def ingest_tables(
         tp_dst = os.path.join(
             out_dir, f"{name}.{tp_spec['name']}.topkproj.parquet"
         ) if tp_spec else ""
-        table_marker = os.path.join(dst, "_SUCCESS")
-        table_fresh = _marker_fresh(table_marker, fingerprint)
-        # colstats publish in lockstep with the keydict they derive from
-        kd_fresh = not kd_cols or (
-            _marker_fresh(os.path.join(kd_dst, "_SUCCESS"), fingerprint)
-            and _marker_fresh(os.path.join(cs_dst, "_SUCCESS"), fingerprint)
-        )
-        ap2_dst = (
-            _coarse_dst(out_dir, name, ap_spec)
-            if ap_spec and "coarse" in ap_spec
-            else ""
-        )
-        ap_fresh = not ap_spec or (
-            _marker_fresh(os.path.join(ap_dst, "_SUCCESS"), fingerprint)
-            and (
-                not ap2_dst
-                or _marker_fresh(os.path.join(ap2_dst, "_SUCCESS"), fingerprint)
-            )
-        )
-        tp_fresh = not tp_spec or _marker_fresh(
-            os.path.join(tp_dst, "_SUCCESS"), fingerprint
-        )
         bk_col = _BUCKET_LAYOUT.get(name)
         bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
-        nb = max(8, cpus)
-        bk_fp = f"{fingerprint}:bk{nb}"
-        bk_meta = {"bucket_col": bk_col, "n_buckets": nb}
-        bk_fresh = not bk_col or _marker_fresh(
-            os.path.join(bk_dst, "_SUCCESS"), bk_fp
-        )
-        if table_fresh and kd_fresh and ap_fresh and tp_fresh and bk_fresh:
-            continue
         key, target_rows = _INGEST_LAYOUT.get(name, (None, 150_000))
         local = src_bytes < LOCAL_INGEST_MAX_BYTES
-        if not table_fresh:
-            # Append-only delta path: a directory source that only GAINED
-            # part files since the recorded manifest ingests just the new
-            # batch and MERGES the keydict projection — O(batch), not
-            # O(history). Requires table and keydict markers in lockstep
-            # (same prior fingerprint), else a merge would compound onto a
-            # dictionary from a different table state.
-            delta = _delta_files(table_marker, layout, manifest) if local else None
-            if delta is not None:
-                # schema gate: a batch that ADDS columns (or changes a
-                # type) is the evolution event — full rebuild under the
-                # unified schema; subset batches stay O(batch) (null-fill)
-                old_parts = _read_marker(table_marker)[1].get("parts") or {}
-                if old_parts and not _delta_schema_ok(
-                    src, old_parts, delta, dst
-                ):
-                    delta = None
-            if delta is not None:
-                # pre-append fingerprint: a projection merges ONLY when it
-                # was built from exactly this table state — merging onto a
-                # sibling from a different state would compound. Siblings
-                # out of lockstep (e.g. a projection type declared after
-                # the copy was built, or a crash between an earlier append
-                # and its merge) do NOT cancel the O(batch) table append;
-                # they are rebuilt from the appended managed copy instead.
-                old_table_fp, _ = _read_marker(table_marker)
-                tbl_state[name]["prev_fp"] = old_table_fp
+        # a present sibling merges only when it was built from exactly the
+        # pre-change table state — merging onto one from a different state
+        # would compound
+        old_table_fp, old_tmeta = _read_marker(table_marker)
 
-                def _lockstep(sib: str) -> bool:
-                    fp, _m = _read_marker(os.path.join(sib, "_SUCCESS"))
-                    return fp == old_table_fp
+        def _lockstep(sib: str) -> bool:
+            return _marker_fresh(os.path.join(sib, "_SUCCESS"), old_table_fp)
 
-                kd_merge = bool(kd_cols) and _lockstep(kd_dst) and _lockstep(cs_dst)
-                _ingest_local_append(
-                    src, dst, kd_dst, delta, key,
-                    kd_cols if kd_merge else None,
-                    target_rows, fingerprint, meta,
-                )
-                if kd_cols and not kd_merge:
-                    _build_keydict_local(dst, kd_dst, kd_cols, fingerprint, meta)
-                if ap_spec:
-                    if _lockstep(ap_dst):
-                        _build_aggproj(
-                            spark, ap_spec,
-                            [os.path.join(src, f) for f in delta],
-                            ap_dst, fingerprint, meta, merge_with=ap_dst,
-                        )
-                    else:
-                        _build_aggproj(
-                            spark, ap_spec, [dst], ap_dst, fingerprint, meta
-                        )
-                    if ap2_dst:
-                        _build_coarse_aggproj(
-                            spark, ap_spec, ap_dst, ap2_dst, fingerprint, meta
-                        )
-                if tp_spec:
-                    if _lockstep(tp_dst):
-                        _build_topkproj(
-                            spark, tp_spec,
-                            [os.path.join(src, f) for f in delta],
-                            tp_dst, fingerprint, meta, merge_with=tp_dst,
-                        )
-                    else:
-                        _build_topkproj(
-                            spark, tp_spec, [dst], tp_dst, fingerprint, meta
-                        )
-                if bk_col:
-                    # lockstep = built from exactly the pre-append table
-                    # state AND the same bucket count; else rebuild from the
-                    # (already appended) managed copy
-                    bk_have, _bm = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
-                    if bk_have == f"{old_table_fp}:bk{nb}":
-                        _append_bucketed(
-                            spark,
-                            [os.path.join(src, f) for f in delta],
-                            bk_dst, bk_col, nb, bk_fp, bk_meta,
-                            hashlib.md5("|".join(delta).encode()).hexdigest()[:8],
-                        )
-                    else:
-                        _build_bucketed(
-                            spark, dst, bk_dst, bk_col, nb, bk_fp, bk_meta
-                        )
-                tbl_state[name]["delta"] = delta
-                appended += 1
-                continue
-            # Whole-batch DELETE path: the source lost exactly some
-            # previously-appended batches (nothing added/rewritten). The
-            # managed copy drops the tagged part files in a new hardlinked
-            # generation; SUM-mergeable projections (keydict/colstats/
-            # aggproj) absorb the removed rows as NEGATIVE deltas —
-            # O(batch + projection), never O(history). Ordered/vector/
-            # bucketed artifacts cannot subtract (a removed top row
-            # invalidates them) and rebuild from the post-delete managed
-            # copy — the documented rebuild-on-delete half of the
-            # contract. Everything else (base-file removal, rewrites,
-            # compaction) stays a full rebuild via fingerprint miss.
-            removed = (
-                _removed_batches(table_marker, layout, manifest)
-                if local
-                else None
+        # Append-only delta path: a directory source that only GAINED part
+        # files since the recorded manifest ingests just the new batch and
+        # MERGES every present artifact that is in lockstep with the
+        # pre-append table state — O(batch), not O(history). A present
+        # sibling out of lockstep (a crash between an earlier append and
+        # its merge) does NOT cancel the O(batch) table append; it is
+        # rebuilt from the appended managed copy by _refresh_present.
+        delta = _delta_files(table_marker, layout, manifest) if local else None
+        if delta is not None:
+            # schema gate: a batch that ADDS columns (or changes a type) is
+            # the evolution event — full rebuild under the unified schema;
+            # subset batches stay O(batch) (null-fill)
+            old_parts = old_tmeta.get("parts") or {}
+            if old_parts and not _delta_schema_ok(src, old_parts, delta, dst):
+                delta = None
+        if delta is not None:
+            tbl_state[name]["prev_fp"] = old_table_fp
+            kd_merge = bool(kd_cols) and _lockstep(kd_dst) and _lockstep(cs_dst)
+            _ingest_local_append(
+                src, dst, kd_dst, delta, key,
+                kd_cols if kd_merge else None,
+                target_rows, fingerprint, meta,
             )
-            if removed is not None:
-                old_table_fp, old_tmeta = _read_marker(table_marker)
-                tbl_state[name]["prev_fp"] = old_table_fp
-                old_batches = old_tmeta.get("batches") or {}
-                tags = sorted({old_batches[f] for f in removed})
-                meta_del = {
-                    **(meta or {}),
-                    "batches": {
-                        k: v
-                        for k, v in old_batches.items()
-                        if k not in removed
-                    },
-                }
-
-                def _lockstep_del(sib: str) -> bool:
-                    fp, _m = _read_marker(os.path.join(sib, "_SUCCESS"))
-                    return fp == old_table_fp
-
-                kd_merge = (
-                    bool(kd_cols)
-                    and _lockstep_del(kd_dst)
-                    and _lockstep_del(cs_dst)
+            delta_paths = [os.path.join(src, f) for f in delta]
+            if ap_spec and _lockstep(ap_dst):
+                _build_aggproj(
+                    spark, ap_spec, delta_paths, ap_dst, fingerprint, meta,
+                    merge_with=ap_dst,
                 )
-                hold = _ingest_local_delete(
-                    dst, kd_dst, tags,
-                    kd_cols if kd_merge else None,
+            if tp_spec and _lockstep(tp_dst):
+                _build_topkproj(
+                    spark, tp_spec, delta_paths, tp_dst, fingerprint, meta,
+                    merge_with=tp_dst,
+                )
+            bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
+            nb = bk_meta.get("n_buckets")
+            if bk_col and nb and bk_have == f"{old_table_fp}:bk{nb}":
+                _append_bucketed(
+                    spark, delta_paths, bk_dst, bk_col, nb,
+                    f"{fingerprint}:bk{nb}", bk_meta,
+                    hashlib.md5("|".join(delta).encode()).hexdigest()[:8],
+                )
+            _refresh_present(spark, out_dir, name)
+            tbl_state[name]["delta"] = delta
+            appended += 1
+            continue
+        # Whole-batch DELETE path: the source lost exactly some
+        # previously-appended batches (nothing added/rewritten). The
+        # managed copy drops the tagged part files in a new hardlinked
+        # generation; present SUM-mergeable projections (keydict/colstats/
+        # aggproj) absorb the removed rows as NEGATIVE deltas —
+        # O(batch + projection), never O(history). Ordered/vector
+        # artifacts cannot subtract (a removed top row invalidates them)
+        # and rebuild from the post-delete managed copy when present — the
+        # documented rebuild-on-delete half of the contract. Everything
+        # else (base-file removal, rewrites, compaction) stays a full
+        # rebuild via fingerprint miss.
+        removed = (
+            _removed_batches(table_marker, layout, manifest)
+            if local
+            else None
+        )
+        if removed is not None:
+            tbl_state[name]["prev_fp"] = old_table_fp
+            old_batches = old_tmeta.get("batches") or {}
+            tags = sorted({old_batches[f] for f in removed})
+            meta_del = {
+                **(meta or {}),
+                "batches": {
+                    k: v
+                    for k, v in old_batches.items()
+                    if k not in removed
+                },
+            }
+            kd_merge = (
+                bool(kd_cols) and _lockstep(kd_dst) and _lockstep(cs_dst)
+            )
+            hold = _ingest_local_delete(
+                dst, kd_dst, tags,
+                kd_cols if kd_merge else None,
+                fingerprint, meta_del,
+            )
+            held_paths = sorted(
+                os.path.join(hold, f)
+                for f in os.listdir(hold)
+                if f.endswith(".parquet")
+            )
+            if ap_spec and _lockstep(ap_dst) and held_paths:
+                _build_aggproj(
+                    spark, ap_spec, held_paths, ap_dst,
                     fingerprint, meta_del,
+                    merge_with=ap_dst, negate=True,
                 )
-                held_paths = sorted(
-                    os.path.join(hold, f)
-                    for f in os.listdir(hold)
-                    if f.endswith(".parquet")
-                )
-                if kd_cols and not kd_merge:
-                    _build_keydict_local(
-                        dst, kd_dst, kd_cols, fingerprint, meta_del
+            # O(batch) when the bucketed copy is in lockstep AND every
+            # removed batch's bucket files carry its tag (i.e. the batch
+            # was appended after the copy existed)
+            bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
+            nb = bk_meta.get("n_buckets")
+            if bk_col and nb and bk_have == f"{old_table_fp}:bk{nb}":
+                tagged = {
+                    f.split("-", 1)[0][1:]
+                    for f in os.listdir(bk_dst)
+                    if f.startswith("a") and f.endswith(".parquet")
+                }
+                if all(t in tagged for t in tags):
+                    _delete_bucketed(
+                        bk_dst, tags, f"{fingerprint}:bk{nb}", bk_meta
                     )
-                if ap_spec:
-                    if _lockstep_del(ap_dst) and held_paths:
-                        _build_aggproj(
-                            spark, ap_spec, held_paths, ap_dst,
-                            fingerprint, meta_del,
-                            merge_with=ap_dst, negate=True,
-                        )
-                    else:
-                        _build_aggproj(
-                            spark, ap_spec, [dst], ap_dst,
-                            fingerprint, meta_del,
-                        )
-                    if ap2_dst:
-                        _build_coarse_aggproj(
-                            spark, ap_spec, ap_dst, ap2_dst,
-                            fingerprint, meta_del,
-                        )
-                if tp_spec:
-                    _build_topkproj(
-                        spark, tp_spec, [dst], tp_dst, fingerprint, meta_del
-                    )
-                if bk_col:
-                    # O(batch) when the copy is in lockstep AND every
-                    # removed batch's bucket files carry its tag (i.e. the
-                    # batch was appended after the copy existed); else
-                    # rebuild from the post-delete managed table
-                    bk_have, _bm = _read_marker(
-                        os.path.join(bk_dst, "_SUCCESS")
-                    )
-                    tagged = {
-                        f.split("-", 1)[0][1:]
-                        for f in os.listdir(bk_dst)
-                        if f.startswith("a") and f.endswith(".parquet")
-                    }
-                    if bk_have == f"{old_table_fp}:bk{nb}" and all(
-                        t in tagged for t in tags
-                    ):
-                        _delete_bucketed(bk_dst, tags, bk_fp, bk_meta)
-                    else:
-                        _build_bucketed(
-                            spark, dst, bk_dst, bk_col, nb, bk_fp, bk_meta
-                        )
-                tbl_state[name]["removed_paths"] = held_paths
-                hold_dirs.append(hold)
-                deleted += 1
-                continue
-            if local:
-                # Local fast path: at landed-file sizes below a task's worth
-                # of data, a driver-side pyarrow sort+split (deterministic,
-                # no sampling job) beats a Spark repartitionByRange round by
-                # ~10×. The distributed branch below is the same layout at
-                # scale.
-                _ingest_local(
-                    src, dst, key, min_rows_to_split, cpus, parts,
-                    fingerprint, target_rows, meta,
-                )
-            else:
-                df = (
-                    read_events(spark, src)
-                    if name == "events"
-                    # mergeSchema: a directory landing whose parts evolved
-                    # additively unions to one schema (old rows null-fill)
-                    # instead of silently dropping the new columns
-                    else spark.read.option("mergeSchema", "true").parquet(src)
-                )
-                # merge-tombstone replay, same contract as _read_landed's
-                # on the local branch: a full rebuild must not resurrect
-                # merge-replaced rows next to their batch versions
-                df = _replay_tombstones_spark(src, df)
-                if key:
-                    n_parts = parts or max(2, cpus // 2)
-                    df = df.repartitionByRange(n_parts, key)
-                # same atomic rename-aside publish as every local builder:
-                # an in-place mode("overwrite") would delete dst first,
-                # breaking concurrent readers and crash recovery
-                _publish_dir(
-                    dst, fingerprint, meta,
-                    lambda tmp: df.write.mode("overwrite").parquet(tmp),
-                )
-            # a full rebuild starts a new state lineage (source rewrite /
-            # layout change): pre-rebuild generations must not be restorable
-            _drop_snapshots(dst)
-            rebuilt += 1
-        if kd_cols and (not kd_fresh or not table_fresh):
-            build = _build_keydict_local if local else _build_keydict_spark
-            args = (dst, kd_dst, kd_cols, fingerprint, meta)
-            build(*args) if local else build(spark, *args)
-        if ap_spec and (not ap_fresh or not table_fresh):
-            _build_aggproj(spark, ap_spec, [dst], ap_dst, fingerprint, meta)
-            if ap2_dst:
-                _build_coarse_aggproj(
-                    spark, ap_spec, ap_dst, ap2_dst, fingerprint, meta
-                )
-        if tp_spec and (not tp_fresh or not table_fresh):
-            _build_topkproj(spark, tp_spec, [dst], tp_dst, fingerprint, meta)
-        if bk_col and (not bk_fresh or not table_fresh):
-            _build_bucketed(spark, dst, bk_dst, bk_col, nb, bk_fp, bk_meta)
+            _refresh_present(spark, out_dir, name)
+            tbl_state[name]["removed_paths"] = held_paths
+            hold_dirs.append(hold)
+            deleted += 1
+            continue
+        if local:
+            # Local fast path: at landed-file sizes below a task's worth
+            # of data, a driver-side pyarrow sort+split (deterministic,
+            # no sampling job) beats a Spark repartitionByRange round by
+            # ~10×. The distributed branch below is the same layout at
+            # scale.
+            _ingest_local(
+                src, dst, key, min_rows_to_split, cpus, parts,
+                fingerprint, target_rows, meta,
+            )
+        else:
+            df = (
+                read_events(spark, src)
+                if name == "events"
+                # mergeSchema: a directory landing whose parts evolved
+                # additively unions to one schema (old rows null-fill)
+                # instead of silently dropping the new columns
+                else spark.read.option("mergeSchema", "true").parquet(src)
+            )
+            # merge-tombstone replay, same contract as _read_landed's
+            # on the local branch: a full rebuild must not resurrect
+            # merge-replaced rows next to their batch versions
+            df = _replay_tombstones_spark(src, df)
+            if key:
+                n_parts = parts or max(2, cpus // 2)
+                df = df.repartitionByRange(n_parts, key)
+            # same atomic rename-aside publish as every local builder:
+            # an in-place mode("overwrite") would delete dst first,
+            # breaking concurrent readers and crash recovery
+            _publish_dir(
+                dst, fingerprint, meta,
+                lambda tmp: df.write.mode("overwrite").parquet(tmp),
+            )
+        # a full rebuild starts a new state lineage (source rewrite /
+        # layout change): pre-rebuild generations must not be restorable
+        _drop_snapshots(dst)
+        rebuilt += 1
+        _refresh_present(spark, out_dir, name)
     # Materialized star rollups (see _JOIN_PROJECTIONS): rebuilt when any
     # source changed; insert-only IVM when ONLY the fact gained files,
     # delete-IVM when it only lost a batch / predicate-matched rows.
@@ -6649,28 +6570,37 @@ def ingest_tables(
 
 
 def _maintain_join_projections(
-    spark: SparkSession, out_dir: str, tbl_state: dict[str, dict]
+    spark: SparkSession,
+    out_dir: str,
+    tbl_state: dict[str, dict],
+    build: str | None = None,
 ) -> int:
-    """(Re)build or IVM-merge every declared star rollup whose sources are
-    all present in ``tbl_state`` ({table: {"fp", "src", "delta",
-    "prev_fp"?, "removed_paths"?}}). Returns how many rollups were
-    maintained incrementally (insert- or delete-IVM) rather than rebuilt.
-    Shared by ingest_tables (append/delete delta paths) and delete_where
-    (predicate deletes feed the removed rows as ``removed_paths``)."""
+    """Rebuild or IVM-merge every PRESENT star rollup whose sources are
+    all in ``tbl_state`` ({table: {"fp", "src", "delta", "prev_fp"?,
+    "removed_paths"?}}); absent rollups stay absent. ``build`` names one
+    rollup to build even when absent (the first-read path) and restricts
+    the pass to it. Returns how many rollups were maintained
+    incrementally (insert- or delete-IVM) rather than rebuilt. Shared by
+    ingest_tables (append/delete delta paths), delete_where / update_where
+    (predicate deletes feed the removed rows as ``removed_paths``) and
+    the first-read build."""
     jp_ivm = 0
     for jp_name, spec in _JOIN_PROJECTIONS.items():
         if any(t not in tbl_state for t in spec["sources"]):
             continue
+        if build is None:
+            if not _artifact_present(out_dir, f"{jp_name}.joinproj.parquet"):
+                continue
+        elif jp_name != build:
+            continue
         comp = {t: tbl_state[t]["fp"] for t in spec["sources"]}
-        # jp2: rollup schema carries cnt for delete-delta maintenance
-        jp_fp = ";".join(f"{t}={comp[t]}" for t in sorted(comp)) + ":jp2"
+        jp_fp = _jp_fingerprint(comp)
         jp_dst = os.path.join(out_dir, f"{jp_name}.joinproj.parquet")
         jp_marker = os.path.join(jp_dst, "_SUCCESS")
         jp_meta = {"components": comp}
         if _marker_fresh(jp_marker, jp_fp):
-            # fine rollup already in lockstep; heal a missing/stale coarse
-            # derivation (first run after upgrade, crash between the two
-            # publishes)
+            # fine rollup already in lockstep; heal a stale coarse
+            # derivation (crash between the two publishes)
             _maintain_coarse_joinproj(
                 spark, out_dir, jp_name, spec, jp_dst, jp_fp, jp_meta
             )
@@ -6742,7 +6672,7 @@ def _maintain_join_projections(
             # contribution is independently subtractable/re-addable). The
             # intermediate publish carries a fingerprint no reader accepts
             # (":neg"), so a crash between the merges is refused by
-            # lockstep and rebuilt on the next ingest.
+            # lockstep and rebuilt by its next read or commit.
             src_paths[fact] = fact_upd_old
             _build_joinproj(
                 spark, spec, src_paths, jp_dst, f"{jp_fp}:neg", jp_meta,
@@ -6808,10 +6738,15 @@ def _bucket_files(dst: str, buckets) -> list[str]:
 
 
 def _maintain_result_projections(
-    spark: SparkSession, out_dir: str, tbl_state: dict[str, dict]
+    spark: SparkSession,
+    out_dir: str,
+    tbl_state: dict[str, dict],
+    build: str | None = None,
 ) -> int:
-    """(Re)build or merge every declared result projection whose source
-    table is in ``tbl_state``; returns how many merged incrementally.
+    """Rebuild or merge every PRESENT result projection whose source table
+    is in ``tbl_state``; returns how many merged incrementally. Absent
+    artifacts stay absent; ``build`` names one to build even when absent
+    (the first-read path) and restricts the pass to it.
 
     On the append-only delta path, artifacts whose module declares a
     merger (PROJECTION_MERGERS) update incrementally (pairs: O(batch ×
@@ -6828,9 +6763,14 @@ def _maintain_result_projections(
     append mergers only score new rows) rebuilds — a deleted top pair
     needs a replacement no merge can produce."""
     vp_merged = 0
-    for _vp_name, vp_spec in _RESULT_PROJECTIONS.items():
+    for vp_name, vp_spec in _RESULT_PROJECTIONS.items():
         t = vp_spec["table"]
         if t not in tbl_state:
+            continue
+        if build is None:
+            if not _artifact_present(out_dir, vp_spec["artifact"]):
+                continue
+        elif vp_name != build:
             continue
         vp_ver = vp_spec.get("version", "vp2")
         vp_fp = tbl_state[t]["fp"] + ":" + vp_ver
@@ -7069,6 +7009,282 @@ def _maintain_result_projections(
             if hasattr(stale, "unpersist"):
                 stale.unpersist()
     return vp_merged
+
+
+# Declared artifacts: path under the managed dir -> spec. This one table
+# drives both halves of the demand-driven contract:
+#   - build on first read: a ``*_view`` / ``bucketed_table`` miss on an
+#     sf_dir this session ingested builds the artifact (its ``parent``
+#     first, for a coarse cut) through the atomic ``_publish_dir`` and
+#     then serves it; ingest itself publishes table copies only;
+#   - maintain only what exists: every commit (ingest append/delete
+#     deltas, delete_where, update_where, merge_into) merges the artifacts
+#     whose marker exists and is in lockstep with the pre-commit table
+#     state, and rebuilds the ones that exist but are out of lockstep.
+#     An artifact no reader ever requested costs nothing at commit time.
+# ``tables`` are the managed tables the artifact derives from; ``expect``
+# maps their current fingerprints (and the artifact's own marker meta) to
+# the fingerprint a fresh artifact carries. Declaration order puts every
+# parent before its cuts, so a refresh pass in order sees parents fresh.
+_ARTIFACTS: dict[str, dict] = {}
+
+
+def _jp_fingerprint(components: dict[str, str]) -> str:
+    """Star-rollup fingerprint over its source tables' fingerprints (jp2:
+    the rollup schema carries cnt for delete-delta maintenance)."""
+    return ";".join(f"{t}={components[t]}" for t in sorted(components)) + ":jp2"
+
+
+def _declare_artifacts() -> None:
+    def own(t):
+        return lambda fps, _m: fps[t]
+
+    for t in _DICT_LAYOUT:
+        # colstats derive from the keydict and publish with it
+        for rel in (f"{t}.keydict.parquet", f"{t}.colstats.parquet"):
+            _ARTIFACTS[rel] = {"kind": "keydict", "tables": (t,), "expect": own(t)}
+    for t, spec in _AGG_PROJECTIONS.items():
+        fine = f"{t}.aggproj.parquet"
+        _ARTIFACTS[fine] = {"kind": "aggproj", "tables": (t,), "expect": own(t)}
+        if "coarse" in spec:
+            _ARTIFACTS[f"{t}.aggproj.{spec['coarse']['suffix']}.parquet"] = {
+                "kind": "aggproj_cut", "tables": (t,), "expect": own(t),
+                "parent": fine,
+            }
+    for t, spec in _TOPK_PROJECTIONS.items():
+        _ARTIFACTS[f"{t}.{spec['name']}.topkproj.parquet"] = {
+            "kind": "topk", "tables": (t,), "expect": own(t),
+        }
+    for t in _BUCKET_LAYOUT:
+        _ARTIFACTS[f"{t}.bucketed.parquet"] = {
+            "kind": "bucketed", "tables": (t,),
+            "expect": lambda fps, m, t=t: f"{fps[t]}:bk{m.get('n_buckets')}",
+        }
+    for jp_name, spec in _JOIN_PROJECTIONS.items():
+        fine = f"{jp_name}.joinproj.parquet"
+        _ARTIFACTS[fine] = {
+            "kind": "joinproj", "name": jp_name, "tables": spec["sources"],
+            "expect": lambda fps, _m: _jp_fingerprint(fps),
+        }
+        if "coarse" in spec:
+            _ARTIFACTS[_coarse_jp_dst("", jp_name, spec)] = {
+                "kind": "joinproj_cut", "name": jp_name,
+                "tables": spec["sources"],
+                "expect": lambda fps, _m: _jp_fingerprint(fps),
+                "parent": fine,
+            }
+    for vp_name, spec in _RESULT_PROJECTIONS.items():
+        t, ver = spec["table"], spec.get("version", "vp2")
+        _ARTIFACTS[spec["artifact"]] = {
+            "kind": "result", "name": vp_name, "tables": (t,),
+            "expect": lambda fps, _m, t=t, ver=ver: f"{fps[t]}:{ver}",
+        }
+
+
+_declare_artifacts()
+
+
+def _artifact_present(out_dir: str, rel: str) -> bool:
+    """True when the artifact has been published at some table state — the
+    maintenance gate: only present artifacts are merged or rebuilt."""
+    return os.path.exists(os.path.join(out_dir, rel, "_SUCCESS"))
+
+
+def _artifact_fresh(out_dir: str, rel: str) -> bool:
+    a = _ARTIFACTS[rel]
+    fps = {
+        t: _read_marker(os.path.join(out_dir, f"{t}.parquet", "_SUCCESS"))[0]
+        for t in a["tables"]
+    }
+    if not all(fps.values()):
+        return False
+    art_fp, meta = _read_marker(os.path.join(out_dir, rel, "_SUCCESS"))
+    return bool(art_fp) and art_fp == a["expect"](fps, meta)
+
+
+def _tables_state(out_dir: str) -> dict[str, dict]:
+    """Maintainer input for a commit-free pass: every managed table at its
+    current fingerprint with no delta (maintainers then build or rebuild,
+    never merge)."""
+    state: dict[str, dict] = {}
+    for t in TABLES:
+        t_dst = os.path.join(out_dir, f"{t}.parquet")
+        fp, _m = _read_marker(os.path.join(t_dst, "_SUCCESS"))
+        if fp:
+            state[t] = {"fp": fp, "src": t_dst, "delta": None}
+    return state
+
+
+def _build_artifact(spark: SparkSession, out_dir: str, rel: str) -> None:
+    """Full build of one declared artifact from the current managed
+    tables (its parent, for a cut, must already be fresh)."""
+    a = _ARTIFACTS[rel]
+    kind, t = a["kind"], a["tables"][0]
+    dst = os.path.join(out_dir, f"{t}.parquet")
+    fp, meta = _read_marker(os.path.join(dst, "_SUCCESS"))
+    art = os.path.join(out_dir, rel)
+    if kind == "keydict":
+        kd_dst = os.path.join(out_dir, f"{t}.keydict.parquet")
+        files, nbytes = _expand_local_paths([dst])
+        if files and nbytes < LOCAL_INGEST_MAX_BYTES:
+            _build_keydict_local(dst, kd_dst, _DICT_LAYOUT[t], fp, meta)
+        else:
+            _build_keydict_spark(spark, dst, kd_dst, _DICT_LAYOUT[t], fp, meta)
+    elif kind == "aggproj":
+        _build_aggproj(spark, _AGG_PROJECTIONS[t], [dst], art, fp, meta)
+    elif kind == "aggproj_cut":
+        _build_coarse_aggproj(
+            spark, _AGG_PROJECTIONS[t], os.path.join(out_dir, a["parent"]),
+            art, fp, meta,
+        )
+    elif kind == "topk":
+        _build_topkproj(spark, _TOPK_PROJECTIONS[t], [dst], art, fp, meta)
+    elif kind == "bucketed":
+        col = _BUCKET_LAYOUT[t]
+        nb = max(8, int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)))
+        _build_bucketed(
+            spark, dst, art, col, nb, f"{fp}:bk{nb}",
+            {"bucket_col": col, "n_buckets": nb},
+        )
+    elif kind == "joinproj":
+        _maintain_join_projections(
+            spark, out_dir, _tables_state(out_dir), build=a["name"]
+        )
+    elif kind == "joinproj_cut":
+        jp_dst = os.path.join(out_dir, a["parent"])
+        jp_fp, jp_meta = _read_marker(os.path.join(jp_dst, "_SUCCESS"))
+        _maintain_coarse_joinproj(
+            spark, out_dir, a["name"], _JOIN_PROJECTIONS[a["name"]], jp_dst,
+            jp_fp, jp_meta, build=True,
+        )
+    else:  # result
+        _maintain_result_projections(
+            spark, out_dir, _tables_state(out_dir), build=a["name"]
+        )
+
+
+def _build_lock(lock: str, timeout: float = 600.0) -> bool:
+    """Take an artifact's build lock: True once this process holds it;
+    False after waiting for another live holder to finish (the caller
+    re-checks freshness). A lock whose holder died is removed. The lock
+    is created atomically WITH its holder pid (hardlink of a pid file)."""
+    import time
+
+    tmp = f"{lock}.{os.getpid()}-{threading.get_ident()}"
+    with open(tmp, "w") as fh:
+        fh.write(str(os.getpid()))
+    try:
+        os.link(tmp, lock)
+        return True
+    except FileExistsError:
+        pass
+    finally:
+        os.unlink(tmp)
+    deadline = time.monotonic() + timeout
+    while time.monotonic() < deadline:
+        try:
+            with open(lock) as fh:
+                holder = int(fh.read())
+        except (OSError, ValueError):
+            return False  # released
+        if holder != os.getpid() and not _pid_alive(holder):
+            try:
+                os.unlink(lock)
+            except OSError:
+                pass
+            return False
+        time.sleep(0.05)
+    return False
+
+
+def _commit_inflight(dst: str) -> bool:
+    """True while the table's commit head is published or pending but its
+    sibling maintenance has not finished (no .done marker) and its writer
+    is alive — the window in which that writer owns the artifacts."""
+    cdir = _commit_log_dir(dst)
+    seq, head = _commit_head(cdir)
+    if head is None or os.path.exists(os.path.join(cdir, f"{seq:06d}.done")):
+        return False
+    fp_now, _m = _read_marker(os.path.join(dst, "_SUCCESS"))
+    if head.get("fp_after") != fp_now and head.get("fp_before") != fp_now:
+        return False  # an unlogged publish (compact/restore) superseded it
+    return head.get("pid") == os.getpid() or _pid_alive(
+        int(head.get("pid", -1))
+    )
+
+
+def _ensure_artifact(
+    spark: SparkSession, out_dir: str, rel: str, maintain: bool = False
+) -> bool:
+    """Build-on-first-read: True when the declared artifact ``rel`` is
+    fresh, building it (parent first) when it is absent or stale. False
+    for an undeclared path, a missing source table, a source table whose
+    commit is still maintaining its artifacts (unless ``maintain``: the
+    caller IS that commit's maintenance), or a build that a
+    concurrent commit raced (a source fingerprint moved mid-build) —
+    callers then take their full-scan plan. Builders serialize on a
+    per-artifact lock, so two processes racing the same first read
+    publish once: the loser waits, finds the winner's generation fresh
+    and serves it, and no reader's file listing is swapped away by a
+    second publish. A loser still waiting after 10 minutes (a holder
+    alive but stuck) gives up with False."""
+    import time
+
+    a = _ARTIFACTS.get(rel)
+    if a is None:
+        return False
+    if _artifact_fresh(out_dir, rel):
+        return True
+    if a.get("parent") and not _ensure_artifact(
+        spark, out_dir, a["parent"], maintain
+    ):
+        return False
+    lock = os.path.join(out_dir, rel + ".building")
+    deadline = time.monotonic() + 600.0
+    while not _build_lock(lock):
+        if _artifact_fresh(out_dir, rel):
+            return True
+        if time.monotonic() > deadline:
+            # a live holder is still building: never hang the reader
+            return False
+    try:
+        if _artifact_fresh(out_dir, rel):
+            return True
+        dsts = [os.path.join(out_dir, f"{t}.parquet") for t in a["tables"]]
+        if not maintain and any(_commit_inflight(d) for d in dsts):
+            return False
+
+        def fps():
+            return [_read_marker(os.path.join(d, "_SUCCESS"))[0] for d in dsts]
+
+        before = fps()
+        if not all(before):
+            return False
+        try:
+            _build_artifact(spark, out_dir, rel)
+        except Exception:
+            if fps() != before:
+                return False
+            raise
+        return _artifact_fresh(out_dir, rel)
+    finally:
+        os.unlink(lock)
+
+
+def _refresh_present(spark: SparkSession, out_dir: str, table: str) -> None:
+    """Rebuild every single-table artifact of ``table`` that exists but is
+    out of lockstep with it — the rebuild half of a commit's maintenance
+    (the merge half runs first, at each commit site). Absent artifacts
+    stay absent. Star rollups and result projections are kept by their
+    own maintainers, which apply the same present-only rule."""
+    for rel, a in _ARTIFACTS.items():
+        if (
+            a["kind"] not in ("joinproj", "joinproj_cut", "result")
+            and a["tables"][0] == table
+            and _artifact_present(out_dir, rel)
+            and not _artifact_fresh(out_dir, rel)
+        ):
+            _ensure_artifact(spark, out_dir, rel, maintain=True)
 
 
 def tune_for_sf(spark: SparkSession, sf_dir: str) -> None:

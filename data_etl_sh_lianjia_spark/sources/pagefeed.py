@@ -268,13 +268,14 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate must equal querying the parquet directly — proving the
     sink's staging/commit cycle publishes exactly the written rows."""
     from data_etl_sh_lianjia_spark.session import load_tables
+    from data_etl_sh_lianjia_spark.sources.readers import derived_copy_path
 
     _ensure_feed_registered(spark)
     orders = load_tables(spark, sf_dir, names=("orders",))["orders"]
     slice_df = orders.filter(F.col("o_orderkey") % 11 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = f"/tmp/spark-graft-feed/orders-{abs(hash(sf_dir)) % 10**8}"
+    path = derived_copy_path("feed", "orders", sf_dir)
     (
         slice_df.write.format("lianjia_feed")
         .mode("overwrite")

@@ -29,6 +29,18 @@ from data_etl_sh_lianjia_spark.plans.registry import register
 from data_etl_sh_lianjia_spark.session import load_tables
 
 
+def derived_copy_path(kind: str, table: str, sf_dir: str) -> str:
+    """Path of the derived ``kind`` copy of ``table`` written from
+    ``sf_dir``, keyed by an md5 of the normalized path — the same name in
+    every process (Python salts ``hash(str)`` per process, which made each
+    process write a fresh copy)."""
+    import hashlib
+    import os
+
+    key = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:8]
+    return f"/tmp/spark-graft-{kind}/{table}-{key}"
+
+
 def _materialize(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Collect a SMALL result and rebind it to a fresh in-memory DataFrame,
     so the caller can delete the scratch storage the plan was reading —
@@ -115,7 +127,7 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice_df = orders.filter(F.col("o_orderkey") % 7 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = f"/tmp/spark-graft-jsonl/orders-{abs(hash(sf_dir)) % 10**8}"
+    path = derived_copy_path("jsonl", "orders", sf_dir)
     write_jsonl(slice_df, path)
     back = read_jsonl(
         spark, path, "o_orderkey long, o_orderstatus string, o_totalprice double"
@@ -150,7 +162,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice_df = cust.filter(F.col("c_custkey") % 5 == 0).select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = f"/tmp/spark-graft-csv/customer-{abs(hash(sf_dir)) % 10**8}"
+    path = derived_copy_path("csv", "customer", sf_dir)
     slice_df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
     back = read_csv_permissive(
         spark, path, "c_custkey long, c_mktsegment string, c_acctbal double"
@@ -452,7 +464,7 @@ def text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             enc("text"),
         ).alias("value")
     )
-    path = f"/tmp/spark-graft-text/documents-{abs(hash(sf_dir)) % 10**8}"
+    path = derived_copy_path("text", "documents", sf_dir)
     slice_df.coalesce(1).write.mode("overwrite").text(path)
     back = spark.read.text(path)
     parts = F.split(F.col("value"), "\t", 3)

@@ -1,10 +1,12 @@
-"""Child worker for the two-process optimistic-concurrency test
-(tests/test_concurrency.py): builds its OWN SparkSession (separate JVM,
-separate Python process — a genuinely independent writer), rendezvouses
-with its sibling through marker files so both mutations race the same
-table generation, then runs one DML kernel and prints its result.
+"""Child worker for the two-process concurrency tests
+(tests/test_concurrency.py, tests/test_lazy_artifacts.py): builds its OWN
+SparkSession (separate JVM, separate Python process — a genuinely
+independent writer or reader), rendezvouses with its sibling through
+marker files so both race the same table generation, then runs one DML
+kernel (roles delete/update) or the first read of the q1 rollup cut
+(roles read-*) and prints its result.
 
-Usage: python tests/_cc_child.py <sf_dir> <role:delete|update> <rv_dir>
+Usage: python tests/_cc_child.py <sf_dir> <role:delete|update|read-*> <rv_dir>
 """
 
 from __future__ import annotations
@@ -42,6 +44,32 @@ def main() -> None:
             print("RESULT", role, "TIMEOUT", flush=True)
             sys.exit(2)
         time.sleep(0.002)
+    if role.startswith("read"):
+        import json
+
+        from data_etl_sh_lianjia_spark.plans.registry import all_queries
+
+        published = []
+        real_publish = sess._publish_dir
+
+        def counting(dst, *a, **k):
+            published.append(os.path.basename(dst))
+            return real_publish(dst, *a, **k)
+
+        sess._publish_dir = counting
+        df = all_queries()["q1_scan_agg"].spark_fn(spark, sf_dir)
+        served = "q1cut" in df._jdf.queryExecution().toString()
+        payload = {
+            "cols": df.columns,
+            "rows": [list(r) for r in df.collect()],
+            "published": published,
+        }
+        print(
+            "RESULT", role, "served" if served else "fallback",
+            json.dumps(payload), flush=True,
+        )
+        spark.stop()
+        return
     if role == "delete":
         n = sess.delete_where(
             spark, sf_dir, "customer",

@@ -39,3 +39,30 @@ def oracle_con():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+@pytest.fixture()
+def first_read(spark):
+    """``first_read(sf_dir, *artifacts)``: read declared artifacts of an
+    ingested sf_dir once through the serving path's build-on-first-read
+    hook (when none are named: every declared artifact whose source
+    tables the sf_dir has), so later commits maintain them. Returns the
+    managed dir."""
+    from data_etl_sh_lianjia_spark import session as sess
+
+    def read(sf_dir, *artifacts):
+        out_dir = spark._lianjia_ingest_map[os.path.normpath(str(sf_dir))]
+        if not artifacts:
+            artifacts = [
+                rel
+                for rel, a in sess._ARTIFACTS.items()
+                if all(
+                    os.path.isdir(os.path.join(out_dir, f"{t}.parquet"))
+                    for t in a["tables"]
+                )
+            ]
+        for rel in artifacts:
+            assert sess._ensure_artifact(spark, out_dir, rel), rel
+        return out_dir
+
+    return read

@@ -7,10 +7,11 @@ embeddings table's fingerprint, LOADED (not rebuilt) per query, refused
 the moment the collection mutates, and rebuilt by the mutation pass
 itself. These tests pin:
 
-- artifact existence + freshness after ingest, and that the serving
-  queries actually read them (plan contains the artifact view);
-- artifact-served results == inline-built results (fresh catalog vs a
-  catalog whose artifacts are absent);
+- artifact existence + freshness after their first read (ingest builds
+  none), and that the serving queries actually read them (plan contains
+  the artifact view);
+- artifact-served results == inline-built results (ingested catalog vs
+  the raw landed dir, which always takes the inline kernels);
 - the mutation lifecycle: delete_where on embeddings invalidates and
   re-derives all five artifacts in the same pass, post-mutation query
   results match a from-scratch recompute, and compaction restamps.
@@ -80,13 +81,16 @@ def _fresh(out_dir, artifact):
 
 
 def test_artifacts_built_served_and_equal_inline(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     sf = _mk_sf(tmp_path, monkeypatch, "sfann")
     sess.ingest_tables(spark, sf)
     out_dir = spark._lianjia_ingest_map[os.path.normpath(sf)]
     for a in ANN_ARTIFACTS:
-        assert _fresh(out_dir, a), f"{a} must be built at ingest and fresh"
+        assert not _fresh(out_dir, a), f"{a} must not be built by ingest"
+    first_read(sf, *ANN_ARTIFACTS)
+    for a in ANN_ARTIFACTS:
+        assert _fresh(out_dir, a), f"{a} must be built by its first read"
 
     # the serving queries READ the artifacts (plan references the view)
     ivf = sim.ann_ivf_topk(spark, sf)
@@ -98,9 +102,9 @@ def test_artifacts_built_served_and_equal_inline(
 
     art_rows = {"ivf": _canon(ivf), "lsh": _canon(lsh), "pq": _canon(pq)}
 
-    # inline fallback: remove the artifacts -> same results from scratch
-    for a in ANN_ARTIFACTS:
-        shutil.rmtree(os.path.join(out_dir, a))
+    # inline fallback: the raw landed dir builds no artifact and runs the
+    # inline kernels -> same results from scratch
+    spark._lianjia_ingest_map.pop(os.path.normpath(sf))
     spark._lianjia_keydict_views = {}
     spark._lianjia_vec_index = {}
     ivf2 = sim.ann_ivf_topk(spark, sf)
@@ -113,7 +117,7 @@ def test_artifacts_built_served_and_equal_inline(
 
 
 def test_mutation_lifecycle_rebuilds_indexes(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """DELETE on the collection must invalidate and re-derive every index
     artifact within the mutation pass; post-mutation ANN results equal a
@@ -121,7 +125,7 @@ def test_mutation_lifecycle_rebuilds_indexes(
     the artifacts serveable."""
     sf = _mk_sf(tmp_path, monkeypatch, "sfannmut")
     sess.ingest_tables(spark, sf)
-    out_dir = spark._lianjia_ingest_map[os.path.normpath(sf)]
+    out_dir = first_read(sf, *ANN_ARTIFACTS)
 
     n = sess.delete_where(
         spark, sf, "embeddings", pc.field("vec_id") >= 400
@@ -145,9 +149,11 @@ def test_mutation_lifecycle_rebuilds_indexes(
         r[0] < 400 and r[1] < 400 for r in rows
     ), "no deleted vec_id may appear in the served graph"
 
-    # rebuild artifacts (ingest is the maintenance pass), then compact:
-    # artifacts must still serve (restamp or rebuild, never stale-refuse)
+    # rebuild artifacts (their first read after the removal), then
+    # compact: artifacts must still serve (restamp or rebuild, never
+    # stale-refuse)
     sess.ingest_tables(spark, sf)
+    first_read(sf, *ANN_ARTIFACTS)
     for a in ANN_ARTIFACTS:
         assert _fresh(out_dir, a)
     sess.compact_table(spark, sf, "embeddings")

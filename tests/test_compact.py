@@ -75,7 +75,7 @@ def _inodes(pattern):
 
 
 def test_compact_reclusters_preserves_values_and_restamps_projections(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     sf = tmp_path / "sfcmp"
     (sf / "lineitem.parquet").mkdir(parents=True)
@@ -89,6 +89,7 @@ def test_compact_reclusters_preserves_values_and_restamps_projections(
         shutil.copy(f"{SRC}/{t}.parquet", str(sf / f"{t}.parquet"))
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf), parts=4, min_rows_to_split=1000)
+    first_read(sf)
     dst = os.path.join(out, "lineitem.parquet")
 
     def _ranges():
@@ -210,7 +211,7 @@ def test_cli_compact_subcommand(spark, tmp_path, monkeypatch, restore_catalog):
 
 
 def test_compact_zorder_clusters_multiple_dimensions(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """OPTIMIZE ZORDER BY: after a z-order compact on (shipdate, partkey),
     per-file min/max stats prune on BOTH columns — a point partkey admits
@@ -223,6 +224,7 @@ def test_compact_zorder_clusters_multiple_dimensions(
         shutil.copy(f"{SRC}/{t}.parquet", str(sf / f"{t}.parquet"))
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf), parts=4, min_rows_to_split=1000)
+    first_read(sf)
     dst = os.path.join(out, "lineitem.parquet")
 
     li = pq.read_table(f"{SRC}/lineitem.parquet")

@@ -98,7 +98,7 @@ def _rows(path_glob):
 
 
 def test_predicate_delete_rewrites_only_affected_files_and_matches_rebuild(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """A predicate on the range-cluster key touches only the files whose
     min/max admit it (hardlink check), and EVERY artifact of the deleted
@@ -106,6 +106,7 @@ def test_predicate_delete_rewrites_only_affected_files_and_matches_rebuild(
     source — delete == rebuild."""
     sf = _mk_sf(tmp_path, monkeypatch)
     out = sess.ingest_tables(spark, sf, parts=4, min_rows_to_split=1000)
+    first_read(sf)
 
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     dates = sorted(li.column("l_shipdate").to_pylist())
@@ -139,6 +140,7 @@ def test_predicate_delete_rewrites_only_affected_files_and_matches_rebuild(
     for t in STAR[1:]:
         shutil.copy(f"{SRC}/{t}.parquet", str(sf2 / f"{t}.parquet"))
     out2 = sess.ingest_tables(spark, str(sf2), parts=4, min_rows_to_split=1000)
+    first_read(sf2)
 
     for artifact in (
         "lineitem.parquet",
@@ -170,10 +172,11 @@ def test_predicate_delete_rewrites_only_affected_files_and_matches_rebuild(
 
 
 def test_predicate_delete_bucketed_copy_rewrites_only_affected_buckets(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     sf = _mk_sf(tmp_path, monkeypatch)
     out = sess.ingest_tables(spark, sf)
+    first_read(sf)
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     key = li.column("l_orderkey").to_pylist()[0]
 
@@ -198,12 +201,13 @@ def test_predicate_delete_bucketed_copy_rewrites_only_affected_buckets(
 
 
 def test_predicate_delete_removing_a_top_row_rebuilds_ordered_projection(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Ordered artifacts cannot subtract: deleting the global #1 row must
     surface the next row — only a rebuild can produce it."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("lineitem",))
     out = sess.ingest_tables(spark, sf)
+    first_read(sf, "lineitem.price_topk.topkproj.parquet")
     tp = os.path.join(out, "lineitem.price_topk.topkproj.parquet")
     top = spark.read.parquet(tp).orderBy("l_extendedprice", ascending=False)
     top1 = top.first()
@@ -226,12 +230,17 @@ def test_predicate_delete_removing_a_top_row_rebuilds_ordered_projection(
 
 
 def test_predicate_delete_vector_artifacts_rebuild_sessions_merge(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Vector pair/k-NN artifacts REBUILD on delete (append-only mergers);
     the sessions artifact delete-MERGES, rewriting only affected buckets."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("events", "embeddings"))
     out = sess.ingest_tables(spark, sf)
+    first_read(
+        sf, "embeddings.cospairs.vecproj.parquet",
+        "embeddings.knn_mod100.vecproj.parquet",
+        "events.sessions.resultproj.parquet",
+    )
 
     # embeddings: delete one vector -> rebuild (merged counter stays 0)
     vec = pq.read_table(f"{SRC}/embeddings.parquet")
@@ -350,13 +359,14 @@ def test_predicate_delete_chain_persists_commutes_and_resets(
 
 
 def test_predicate_delete_crash_before_projection_merge_never_serves_stale(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Die between the table publish and the aggproj negative merge: the
     stale projection is refused by the fingerprint lockstep (q1 falls back
     to the full scan — correct values), and the next ingest rebuilds it."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("lineitem",))
     out = sess.ingest_tables(spark, sf)
+    first_read(sf, "lineitem.aggproj.q1cut.parquet")
 
     real = sess._build_aggproj
 

@@ -108,7 +108,7 @@ def test_distributed_delete_matches_local(
 
 
 def test_distributed_update_matches_local_and_projections(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """The same UPDATE (callable assignment over old values) in both
     regimes: identical updated rows AND an identical keydict projection
@@ -118,6 +118,7 @@ def test_distributed_update_matches_local_and_projections(
     for mode, flag in (("local", "0"), ("dist", "1")):
         sf = _mk_sf(tmp_path, monkeypatch, f"sfupd-{mode}")
         out = sess.ingest_tables(spark, sf)
+        first_read(sf, "lineitem.keydict.parquet")
         monkeypatch.setenv("SPARK_GRAFT_DML_DISTRIBUTED", flag)
         try:
             n = sess.update_where(
@@ -143,7 +144,7 @@ def test_distributed_update_matches_local_and_projections(
 
 
 def test_distributed_keydict_counts_ride_spark_tasks(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """In the distributed regime the keydict deltas come back from the
     split tasks themselves — the driver must NOT re-decode held files
@@ -163,6 +164,7 @@ def test_distributed_keydict_counts_ride_spark_tasks(
     for mode, flag in (("local", "0"), ("dist", "1")):
         sf = _mk_sf(tmp_path, monkeypatch, f"sfkd-{mode}")
         out = sess.ingest_tables(spark, sf)
+        first_read(sf, "lineitem.keydict.parquet")
         monkeypatch.setenv("SPARK_GRAFT_DML_DISTRIBUTED", flag)
         kd_decodes.clear()
         try:
@@ -199,7 +201,7 @@ def test_distributed_keydict_counts_ride_spark_tasks(
 
 
 def test_distributed_compact_sort_rewrite(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Distributed compaction (Spark repartitionByRange + sortWithin):
     value-identical multiset, files pairwise RANGE-DISJOINT on the cluster
@@ -207,6 +209,7 @@ def test_distributed_compact_sort_rewrite(
     restamps in lockstep (served, not rebuilt)."""
     sf = _mk_sf(tmp_path, monkeypatch, "sfcmp")
     out = sess.ingest_tables(spark, sf)
+    first_read(sf, "lineitem.keydict.parquet")
     # a delete first, so compaction has a real multi-generation dir to merge
     sess.delete_where(spark, sf, "lineitem", pc.field("l_suppkey") == 1)
     li_dir = os.path.join(out, "lineitem.parquet")
@@ -538,7 +541,7 @@ def test_distributed_merge_into_upserts(
 
 
 def test_distributed_zorder_compact(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Distributed ZORDER (sampled quantile boundaries -> mapInArrow Morton
     code -> range-partitioned sorted write): values untouched, projections
@@ -552,6 +555,7 @@ def test_distributed_zorder_compact(
         shutil.copy(f"{SRC}/{t}.parquet", str(sf / f"{t}.parquet"))
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf), parts=4, min_rows_to_split=1000)
+    first_read(sf, "lineitem.keydict.parquet")
     dst = os.path.join(out, "lineitem.parquet")
 
     li = pq.read_table(f"{SRC}/lineitem.parquet")

@@ -129,9 +129,10 @@ def test_keydict_projection_serves_distinct_count(
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path))
     out_dir = sess.ingest_tables(spark, sf_dir)
     kd = os.path.join(out_dir, "lineitem.keydict.parquet")
-    assert os.path.exists(os.path.join(kd, "_SUCCESS"))
 
     df = all_queries()["distinct_count"].spark_fn(spark, sf_dir)
+    # built by its first read
+    assert os.path.exists(os.path.join(kd, "_SUCCESS"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "keydict" in plan, "managed distinct_count did not use the projection"
     assert "lineitem.parquet" not in plan, "projection plan still scans the fact table"
@@ -281,6 +282,7 @@ def test_distributed_ingest_branch_matches_local(
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "dist"))
     monkeypatch.setattr(sess, "LOCAL_INGEST_MAX_BYTES", 0)
     out_dir = sess.ingest_tables(spark, sf_dir)
+    dist_dc = _run(spark, sf_dir, "distinct_count")  # first read builds it
     # the distributed branch really ran: Spark's writer emits uuid-suffixed
     # part names (part-00000-<uuid>...parquet), while the local pyarrow
     # branch writes literal part-%05d.parquet — the marker alone could not
@@ -297,7 +299,7 @@ def test_distributed_ingest_branch_matches_local(
         if f.endswith(".parquet")
     ]
     assert li_parts and all(len(f) > len("part-00000.parquet") for f in li_parts)
-    assert _run(spark, sf_dir, "distinct_count") == local_dc
+    assert dist_dc == local_dc
     assert _run(spark, sf_dir, "json_events") == local_je
 
 
@@ -475,7 +477,9 @@ def test_append_only_delta_ingest(spark, tmp_path, monkeypatch, restore_catalog)
     assert row.n_rows == full.num_rows - 7
 
 
-def test_star_rollup_ivm_on_fact_append(spark, tmp_path, monkeypatch, restore_catalog):
+def test_star_rollup_ivm_on_fact_append(
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
+):
     """Insert-only incremental view maintenance of the materialized star
     rollup: appending part files to the FACT alone must delta-join + merge
     (not rebuild), and the rollup-served q5 must stay bit-identical to the
@@ -500,10 +504,15 @@ def test_star_rollup_ivm_on_fact_append(spark, tmp_path, monkeypatch, restore_ca
 
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf))
+    assert spark._lianjia_joinproj_ivm == 0
+    first_read(
+        sf, "sales_geo_date.joinproj.parquet",
+        "sales_geo_year.q5asia.joinproj.parquet",
+        "q3_orderrev.q3top.joinproj.parquet",
+    )
     assert os.path.exists(
         os.path.join(out, "sales_geo_date.joinproj.parquet", "_SUCCESS")
     )
-    assert spark._lianjia_joinproj_ivm == 0
 
     pq.write_table(full.slice(half), str(sf / "lineitem.parquet" / "b1.parquet"))
     sess.ingest_tables(spark, str(sf))
@@ -535,7 +544,9 @@ def test_star_rollup_ivm_on_fact_append(spark, tmp_path, monkeypatch, restore_ca
     assert files, "rollup missing after dimension-change rebuild"
 
 
-def test_events_rollup_merges_on_append(spark, tmp_path, monkeypatch, restore_catalog):
+def test_events_rollup_merges_on_append(
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
+):
     """The events aggregate projection (event_type x day) must merge on an
     append-only events landing and keep json_events bit-identical to the
     full scan over the appended table."""
@@ -549,6 +560,7 @@ def test_events_rollup_merges_on_append(spark, tmp_path, monkeypatch, restore_ca
 
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf))
+    first_read(sf, "events.aggproj.bytype.parquet")
     assert os.path.exists(
         os.path.join(out, "events.aggproj.parquet", "_SUCCESS")
     )
@@ -568,7 +580,7 @@ def test_events_rollup_merges_on_append(spark, tmp_path, monkeypatch, restore_ca
 
 
 def test_ordered_projection_serves_topk_and_merges(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """The ordered (top-k) projection must serve topk_sort bit-identically
     to the full TakeOrderedAndProject plan, and stay exact after an
@@ -583,6 +595,7 @@ def test_ordered_projection_serves_topk_and_merges(
 
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf))
+    first_read(sf, "lineitem.price_topk.topkproj.parquet")
     assert os.path.exists(
         os.path.join(out, "lineitem.price_topk.topkproj.parquet", "_SUCCESS")
     )
@@ -726,10 +739,19 @@ def test_projection_view_requires_fingerprint_lockstep(
     with open(marker, "w") as fh:
         fh.write("9999:9999:rebuilt-elsewhere")
     spark._lianjia_keydict_views = {}
-    assert sess.aggproj_view(spark, str(sf), "lineitem") is None
-    assert sess.keydict_view(spark, str(sf), "lineitem") is None
-    assert sess.colstats_view(spark, str(sf), "lineitem") is None
-    # fallback plan still answers correctly
+
+    def art_fp(rel):
+        return sess._read_marker(os.path.join(out, rel, "_SUCCESS"))[0]
+
+    # the stale projections are never served as they are: the read
+    # rebuilds each one at the table's current fingerprint first
+    assert art_fp("lineitem.aggproj.parquet") != "9999:9999:rebuilt-elsewhere"
+    assert sess.aggproj_view(spark, str(sf), "lineitem") is not None
+    assert sess.keydict_view(spark, str(sf), "lineitem") is not None
+    assert sess.colstats_view(spark, str(sf), "lineitem") is not None
+    for rel in ("aggproj", "keydict", "colstats"):
+        assert art_fp(f"lineitem.{rel}.parquet") == "9999:9999:rebuilt-elsewhere"
+    # and the rebuilt projections answer correctly
     row = all_queries()["distinct_count"].spark_fn(spark, str(sf)).collect()[0]
     import pyarrow.parquet as pqt
 
@@ -739,12 +761,16 @@ def test_projection_view_requires_fingerprint_lockstep(
     with open(marker, "w") as fh:
         fh.write(old)
     assert sess.aggproj_view(spark, str(sf), "lineitem") is not None
+    assert art_fp("lineitem.aggproj.parquet") == old.split("\n")[0]
 
 
-def test_tune_for_sf_caller_cap_survives_dir_switches(spark):
+def test_tune_for_sf_caller_cap_survives_dir_switches(spark, monkeypatch):
     """The 'cap, never raise a CALLER's setting' contract must hold across
     REPEATED dir switches: the caller's value is captured once, not
     re-inferred from the live conf (which this function itself wrote)."""
+    # tune_for_sf caps partitions at the core count; pin it so the
+    # ratchet assertions below do not depend on the host
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     saved_conf = spark.conf.get("spark.sql.shuffle.partitions")
     saved = {
         a: getattr(spark, a, None)
@@ -812,7 +838,8 @@ def test_vector_projections_serve_and_match(
         assert got == raw[n], f"projection-served {n} diverges from kernel"
 
     # stale table marker (table rebuilt elsewhere, projection trailing):
-    # serving must fall back to the full kernel and stay correct
+    # the trailing projection is never served — the read rebuilds it at
+    # the table's current fingerprint, and the answer stays correct
     marker = os.path.join(out, "embeddings.parquet", "_SUCCESS")
     with open(marker) as fh:
         saved = fh.read()
@@ -820,9 +847,9 @@ def test_vector_projections_serve_and_match(
         fh.write("0:0:stale")
     spark._lianjia_keydict_views = {}
     df = all_queries()["cosine_topk"].spark_fn(spark, str(sf))
-    qe = df._jdf.queryExecution()
-    assert "cospairs" not in qe.toString()
-    assert "MapInPandas" in qe.executedPlan().toString()
+    assert sess._read_marker(
+        os.path.join(out, "embeddings.cospairs.vecproj.parquet", "_SUCCESS")
+    )[0] == "0:0:stale:vp2"
     got = canon_rows([tuple(r) for r in df.collect()], df.columns)
     assert got == raw["cosine_topk"]
     with open(marker, "w") as fh:
@@ -878,7 +905,8 @@ def test_sessions_projection_serves_sessionize(
     got = canon_rows([tuple(r) for r in df.collect()], df.columns)
     assert got == raw, "projection-served sessionize diverges from full plan"
 
-    # table moved on, projection trailing -> fallback, still correct
+    # table moved on, projection trailing -> never served as it is: the
+    # read rebuilds it at the table's fingerprint, still correct
     marker = os.path.join(out, "events.parquet", "_SUCCESS")
     with open(marker) as fh:
         saved = fh.read()
@@ -886,14 +914,16 @@ def test_sessions_projection_serves_sessionize(
         fh.write("0:0:stale")
     spark._lianjia_keydict_views = {}
     df = all_queries()["sessionize"].spark_fn(spark, str(sf))
-    assert "lj_events_sessions" not in df._jdf.queryExecution().toString()
+    assert sess._read_marker(
+        os.path.join(out, "events.sessions.resultproj.parquet", "_SUCCESS")
+    )[0] == "0:0:stale:vp3"
     got = canon_rows([tuple(r) for r in df.collect()], df.columns)
     assert got == raw
     with open(marker, "w") as fh:
         fh.write(saved)
 
 def test_sessions_projection_merges_on_append(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Appending event part files must MERGE the sessions artifact
     (re-sessionize only affected users, keep the rest) and stay
@@ -907,6 +937,7 @@ def test_sessions_projection_merges_on_append(
     pq.write_table(full.slice(0, half), str(sf / "events.parquet" / "b0.parquet"))
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     sess.ingest_tables(spark, str(sf))
+    first_read(sf, "events.sessions.resultproj.parquet")
     assert spark._lianjia_resultproj_merged == 0
 
     pq.write_table(full.slice(half), str(sf / "events.parquet" / "b1.parquet"))
@@ -926,7 +957,7 @@ def test_sessions_projection_merges_on_append(
 
 
 def test_pair_projection_merges_on_append(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Appending embedding part files must MERGE the pair projection
     (scan full collection against the broadcast batch, union with the old
@@ -941,6 +972,7 @@ def test_pair_projection_merges_on_append(
     pq.write_table(full.slice(0, half), str(sf / "embeddings.parquet" / "b0.parquet"))
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     sess.ingest_tables(spark, str(sf))
+    first_read(sf, "embeddings.cospairs.vecproj.parquet")
 
     pq.write_table(full.slice(half), str(sf / "embeddings.parquet" / "b1.parquet"))
     sess.ingest_tables(spark, str(sf))
@@ -959,7 +991,7 @@ def test_pair_projection_merges_on_append(
     assert got == want, "merged pair artifact diverges from the full kernel"
 
 def test_knn_projection_merges_on_append(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Appending embedding part files must MERGE the k-NN graph (old
     queries re-ranked against batch candidates only; new mod-100 queries
@@ -974,6 +1006,10 @@ def test_knn_projection_merges_on_append(
     pq.write_table(full.slice(0, half), str(sf / "embeddings.parquet" / "b0.parquet"))
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     sess.ingest_tables(spark, str(sf))
+    first_read(
+        sf, "embeddings.cospairs.vecproj.parquet",
+        "embeddings.knn_mod100.vecproj.parquet",
+    )
 
     pq.write_table(full.slice(half), str(sf / "embeddings.parquet" / "b1.parquet"))
     sess.ingest_tables(spark, str(sf))
@@ -1114,7 +1150,7 @@ def test_bucketed_fact_copies_serve_q3_shuffle_free(
 
 
 def test_bucketed_sessions_merge_rewrites_only_affected_buckets(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """The sessions artifact is hash-bucketed on user_id: an append batch
     touching ONE user must rewrite only that user's bucket — every other
@@ -1152,6 +1188,7 @@ def test_bucketed_sessions_merge_rewrites_only_affected_buckets(
     )
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf))
+    first_read(sf, "events.sessions.resultproj.parquet")
     art = os.path.join(out, "events.sessions.resultproj.parquet")
     before = {
         p: os.stat(p).st_ino
@@ -1223,7 +1260,7 @@ def test_bucketed_sessions_merge_rewrites_only_affected_buckets(
 
 
 def test_whole_batch_delete_negative_merges_projections(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Removing a previously-appended batch takes the O(batch) delete path:
     untouched managed part files survive byte-identical (hardlinked
@@ -1248,6 +1285,7 @@ def test_whole_batch_delete_negative_merges_projections(
         )
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf))
+    first_read(sf)
 
     # append a batch, then delete it again
     pq.write_table(li.slice(cut), str(sf / "lineitem.parquet" / "b1.parquet"))
@@ -1370,12 +1408,13 @@ def test_base_file_delete_falls_back_to_full_rebuild(
 
 
 def test_delete_then_crash_never_serves_stale_projection(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Fingerprint lockstep across the delete path: if the table publishes
     its post-delete generation but a projection's marker is left behind
-    (simulated crash), the projection view/bucketed table refuse to serve
-    and queries fall back — extending
+    (simulated crash), the projection view/bucketed table never serve it
+    as it is — the read rebuilds it at the table's fingerprint and queries
+    stay correct — extending
     test_projection_view_requires_fingerprint_lockstep to deletes."""
     import pyarrow.parquet as pq
 
@@ -1391,6 +1430,7 @@ def test_delete_then_crash_never_serves_stale_projection(
         )
     monkeypatch.setattr(sess, "INGEST_ROOT", str(tmp_path / "ingest"))
     out = sess.ingest_tables(spark, str(sf))
+    first_read(sf, "lineitem.keydict.parquet", "lineitem.bucketed.parquet")
 
     pq.write_table(li.slice(cut), str(sf / "lineitem.parquet" / "b1.parquet"))
     sess.ingest_tables(spark, str(sf))
@@ -1406,18 +1446,29 @@ def test_delete_then_crash_never_serves_stale_projection(
             fh.write("stale:0:x")
     spark._lianjia_keydict_views = {}
     spark._lianjia_bucket_tables = {}
-    assert sess.keydict_view(spark, str(sf), "lineitem") is None
-    assert sess.bucketed_table(spark, str(sf), "lineitem") is None
-    # queries fall back to full plans and stay correct
+    table_fp = sess._read_marker(
+        os.path.join(out, "lineitem.parquet", "_SUCCESS")
+    )[0]
+
+    def art_fp(rel):
+        return sess._read_marker(os.path.join(out, rel, "_SUCCESS"))[0]
+
+    # the stale copies are rebuilt by the read, never served as they are
+    assert sess.keydict_view(spark, str(sf), "lineitem") is not None
+    assert art_fp("lineitem.keydict.parquet") == table_fp
+    assert sess.bucketed_table(spark, str(sf), "lineitem") is not None
+    assert art_fp("lineitem.bucketed.parquet").startswith(table_fp + ":bk")
+    # and the queries they serve stay correct
     row = all_queries()["distinct_count"].spark_fn(spark, str(sf)).collect()[0]
     assert row.n_rows == cut
     from data_etl_sh_lianjia_spark.operators import relational
 
-    assert relational.q3_join3_bucketed(spark, str(sf)) is None, (
-        "stale bucketed copy must be refused"
+    bk = relational.q3_join3_bucketed(spark, str(sf))
+    assert bk is not None
+    full = all_queries()["q3_join3_df"].spark_fn(spark, str(sf))
+    assert canon_rows([tuple(r) for r in bk.collect()], bk.columns) == (
+        canon_rows([tuple(r) for r in full.collect()], full.columns)
     )
-    df = all_queries()["q3_join3"].spark_fn(spark, str(sf))
-    assert "lj_bkt_lineitem" not in df._jdf.queryExecution().toString()
 
 
 def test_murmur3_long_matches_spark_hash(spark):
@@ -1665,3 +1716,73 @@ def test_topkproj_local_twin_parity(spark, sf_dir, tmp_path):
     np_path = str(tmp_path / "nulls.parquet")
     pq2.write_table(nulled, np_path)
     assert sess._topkproj_local(spec, [np_path], None) is None
+
+
+def test_events_rollup_twin_matches_spark_on_int64_micros_ts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An events file whose ``ts`` is a plain int64 (here: epoch MICROS)
+    must roll up identically in the pyarrow twin and the Spark build:
+    read_events takes every BIGINT ts as nanos, so the twin must too —
+    no magnitude guess."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(sess.table_path(sf_dir, "events"))
+    ts = ev.column("ts")
+    micros = pc.cast(pc.cast(ts, pa.timestamp("us")), pa.int64())
+    ev = ev.set_column(
+        ev.schema.get_field_index("ts"), pa.field("ts", pa.int64()), micros
+    )
+    src = str(tmp_path / "events_us.parquet")
+    pq.write_table(ev, src)
+    spec = sess._AGG_PROJECTIONS["events"]
+
+    def built(dst):
+        sess._build_aggproj(spark, spec, [src], dst, "fp", None)
+        t = pq.read_table(dst)
+        return sorted(tuple(r.values()) for r in t.to_pylist())
+
+    local = built(str(tmp_path / "local"))
+    monkeypatch.setattr(sess, "LOCAL_INGEST_MAX_BYTES", 0)
+    on_spark = built(str(tmp_path / "spark"))
+    assert local == on_spark
+    # the day keys really are the nanos reading of the micros values
+    days = {r[1] for r in local}
+    assert days == set(
+        (pc.divide(micros, 86400000000000)).to_pylist()
+    )
+
+
+def test_topkproj_local_defers_expression_order_to_spark(
+    spark, sf_dir, tmp_path
+):
+    """An order term that is an expression (not ``<column> [ASC|DESC]``)
+    makes the driver-side twin ineligible — splitting on whitespace
+    would sort by the bare column — so the Spark path builds it, and the
+    published projection equals Spark's ORDER BY ... LIMIT."""
+    import pyarrow.parquet as pq
+
+    spec = {
+        **sess._TOPK_PROJECTIONS["lineitem"],
+        "order_sql": "l_extendedprice * -1, l_orderkey, l_linenumber, l_partkey",
+    }
+    src = sess.table_path(sf_dir, "lineitem")
+    assert sess._topkproj_local(spec, [src], None) is None
+    dst = str(tmp_path / "tk")
+    sess._build_topkproj(spark, spec, [src], dst, "fp", None)
+    got = [tuple(r.values()) for r in pq.read_table(dst).to_pylist()]
+    cols = ", ".join(spec["cols"])
+    spark.read.parquet(src).createOrReplaceTempView("_tw_tk_expr")
+    want = [
+        tuple(r)
+        for r in spark.sql(
+            f"SELECT {cols} FROM _tw_tk_expr"
+            f" ORDER BY {spec['order_sql']} LIMIT {spec['n']}"
+        ).collect()
+    ]
+    assert got == want
+    # the membership check reads the same order: an expression term is
+    # never judged driver-side (no restamp)
+    assert not sess._topk_unaffected(dst, spec, [src])

@@ -93,3 +93,27 @@ def test_python_datasource_filter_pushdown_prunes_partitions(spark):
     )
     ids = {r["village_id"] for r in df.select("village_id").distinct().collect()}
     assert ids == set(range(10, 30))
+
+
+def test_derived_copy_path_is_stable_across_processes():
+    """Derived source copies are named by an md5 of the normalized sf_dir,
+    not Python's per-process salted ``hash()``: two interpreters with
+    different hash seeds name the same copy (no fresh copy per process)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from data_etl_sh_lianjia_spark.sources.readers import "
+        "derived_copy_path as p; print(p('jsonl', 'orders', '/d/sf0.01/'))"
+    )
+    names = {
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=repo, check=True, text=True,
+            capture_output=True, env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout.strip()
+        for seed in ("1", "2")
+    }
+    assert len(names) == 1
+    assert names.pop() == R.derived_copy_path("jsonl", "orders", "/d/sf0.01")

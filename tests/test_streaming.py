@@ -416,7 +416,7 @@ def test_connector_validation_edges(spark, sf_dir):
 
 
 def test_stream_lakehouse_ingest_maintains_projections_per_epoch(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, first_read
 ):
     """The streaming->lakehouse path: each micro-batch lands through the
     O(batch) delta ingest (never a rebuild after the base ingest), the
@@ -442,6 +442,8 @@ def test_stream_lakehouse_ingest_maintains_projections_per_epoch(
     pq.write_table(ev.slice(n // 2, n // 4), str(staging / "s1.parquet"))
     pq.write_table(ev.slice(n // 2 + n // 4), str(staging / "s2.parquet"))
     out = sess.ingest_tables(spark, str(scratch))
+    # the sessions artifact's first read builds it; each epoch merges it
+    first_read(scratch, "events.sessions.resultproj.parquet")
 
     epochs = []
 

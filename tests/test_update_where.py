@@ -114,7 +114,7 @@ def _bump_qty(t):
 
 
 def test_predicate_update_rewrites_only_affected_files_and_matches_rebuild(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """A predicate on the range-cluster key touches only the files whose
     min/max admit it (hardlink check), and EVERY artifact of the updated
@@ -123,6 +123,7 @@ def test_predicate_update_rewrites_only_affected_files_and_matches_rebuild(
     (negative+positive) merges."""
     sf = _mk_sf(tmp_path, monkeypatch)
     out = sess.ingest_tables(spark, sf, parts=4, min_rows_to_split=1000)
+    first_read(sf)
 
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     dates = sorted(li.column("l_shipdate").to_pylist())
@@ -166,6 +167,7 @@ def test_predicate_update_rewrites_only_affected_files_and_matches_rebuild(
     for t in STAR[1:]:
         shutil.copy(f"{SRC}/{t}.parquet", str(sf2 / f"{t}.parquet"))
     out2 = sess.ingest_tables(spark, str(sf2), parts=4, min_rows_to_split=1000)
+    first_read(sf2)
 
     for artifact in (
         "lineitem.parquet",
@@ -197,13 +199,14 @@ def test_predicate_update_rewrites_only_affected_files_and_matches_rebuild(
 
 
 def test_update_moving_rows_across_group_keys_is_exact(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Updating an aggregate-projection GROUP KEY migrates rows between
     rollup groups — the negative+positive merge must land exactly the
     rebuilt state (groups drained to zero drop, new groups appear)."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("lineitem",))
     out = sess.ingest_tables(spark, sf)
+    first_read(sf, "lineitem.aggproj.parquet")
     li = pq.read_table(f"{SRC}/lineitem.parquet")
 
     predicate = pc.field("l_returnflag") == "R"
@@ -230,15 +233,17 @@ def test_update_moving_rows_across_group_keys_is_exact(
         str(sf2 / "lineitem.parquet"),
     )
     out2 = sess.ingest_tables(spark, str(sf2))
+    first_read(sf2, "lineitem.aggproj.parquet")
     want = spark.read.parquet(os.path.join(out2, "lineitem.aggproj.parquet"))
     assert sorted(map(tuple, ap.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_update_bucketed_copy_targeted_unless_bucket_key_changes(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     sf = _mk_sf(tmp_path, monkeypatch)
     out = sess.ingest_tables(spark, sf)
+    first_read(sf)
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     key = li.column("l_orderkey").to_pylist()[0]
 
@@ -313,13 +318,18 @@ def test_update_null_predicate_rows_untouched_and_set_null(
 
 
 def test_update_sessions_merge_and_vector_rebuild(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Vector pair/k-NN artifacts REBUILD on update (append-only mergers);
     the sessions artifact update-MERGES, rewriting only affected users'
     buckets."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("events", "embeddings"))
     out = sess.ingest_tables(spark, sf)
+    first_read(
+        sf, "embeddings.cospairs.vecproj.parquet",
+        "embeddings.knn_mod100.vecproj.parquet",
+        "events.sessions.resultproj.parquet",
+    )
 
     # embeddings: update one vector -> rebuild (merged counter stays 0)
     vec = pq.read_table(f"{SRC}/embeddings.parquet")
@@ -351,13 +361,14 @@ def test_update_sessions_merge_and_vector_rebuild(
 
 
 def test_update_regexmatch_view_composes_delete_and_append_merge(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """The regex match view has distinct append/delete mergers: an UPDATE
     composes them (old doc ids evicted, new versions filtered in), so a
     doc updated INTO or OUT OF the match set lands correctly."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("documents",))
     out = sess.ingest_tables(spark, sf)
+    first_read(sf, "documents.regexmatch.resultproj.parquet")
     art = os.path.join(out, "documents.regexmatch.resultproj.parquet")
     # snapshot the pre-update match set driver-side: a lazy DataFrame's
     # file listing freezes at analysis and would dangle across the publish
@@ -604,7 +615,7 @@ def test_cli_update_and_merge_subcommands(
 
 
 def test_topk_projection_restamps_when_mutation_cannot_reach_boundary(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Membership-pruned ordered-projection maintenance: deleting or
     updating rows that provably sort after the top-k boundary restamps the
@@ -612,6 +623,7 @@ def test_topk_projection_restamps_when_mutation_cannot_reach_boundary(
     mutation that CAN reach the boundary still rebuilds."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("lineitem",))
     out = sess.ingest_tables(spark, sf)
+    first_read(sf, "lineitem.price_topk.topkproj.parquet")
     tp = os.path.join(out, "lineitem.price_topk.topkproj.parquet")
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     assert li.num_rows > 1000, "fixture: projection must be full"
@@ -686,7 +698,7 @@ def test_projection_relevant_cols_cover_their_sql(spark):
 
 
 def test_update_relevance_restamps_untouched_projections(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """An UPDATE that assigns only columns a projection never reads must
     RESTAMP it (same data files, new fingerprint, still serving) while
@@ -694,6 +706,7 @@ def test_update_relevance_restamps_untouched_projections(
     identical to the full-scan plans."""
     sf = _mk_sf(tmp_path, monkeypatch)
     out = sess.ingest_tables(spark, sf)
+    first_read(sf)
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     key = li.column("l_orderkey").to_pylist()[0]
 
@@ -733,10 +746,14 @@ def test_update_relevance_restamps_untouched_projections(
 
 
 def test_update_relevance_restamps_leaderboard_and_sessions(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     sf = _mk_sf(tmp_path, monkeypatch, tables=("orders", "events"))
     out = sess.ingest_tables(spark, sf)
+    first_read(
+        sf, "orders.custrank.resultproj.parquet",
+        "events.sessions.resultproj.parquet",
+    )
     cr = os.path.join(out, "orders.custrank.resultproj.parquet")
     ss = os.path.join(out, "events.sessions.resultproj.parquet")
     cr_before = _inodes(os.path.join(cr, "*.parquet"))
@@ -789,13 +806,14 @@ def test_update_of_shred_source_rederives_shredded_column(
 
 
 def test_update_of_events_ts_merges_the_time_keyed_rollup(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """The events rollup reads the DERIVED ts_ns; the managed column
     backing it is ts. An update shifting ts a day must MERGE the rollup
     (its ts_day group key moves), never relevance-restamp it."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("events",))
     out = sess.ingest_tables(spark, sf)
+    first_read(sf)
     ev = pq.read_table(f"{SRC}/events.parquet")
     eid = ev.column("event_id").to_pylist()[0]
     ap = os.path.join(out, "events.aggproj.parquet")
@@ -883,7 +901,7 @@ def test_merge_into_same_keys_twice_replaces_again_no_resurrection(
 
 
 def test_update_crash_between_the_two_merges_never_serves_half_merged(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """Die AFTER the negative aggproj merge but BEFORE the positive one:
     the intermediate publish carries the ':neg' fingerprint no reader
@@ -892,6 +910,7 @@ def test_update_crash_between_the_two_merges_never_serves_half_merged(
     post-update table."""
     sf = _mk_sf(tmp_path, monkeypatch, tables=("lineitem",))
     out = sess.ingest_tables(spark, sf)
+    first_read(sf, "lineitem.aggproj.q1cut.parquet")
 
     real = sess._build_aggproj
     calls = {"n": 0}
@@ -929,7 +948,7 @@ def test_update_crash_between_the_two_merges_never_serves_half_merged(
 
 
 def test_point_predicate_prunes_main_file_decodes_via_bucketed_copy(
-    spark, tmp_path, monkeypatch, restore_catalog
+    spark, tmp_path, monkeypatch, restore_catalog, first_read
 ):
     """A bucket-key point predicate resolves against the key-sorted
     bucketed copy first: main files whose cluster range excludes every
@@ -945,6 +964,7 @@ def test_point_predicate_prunes_main_file_decodes_via_bucketed_copy(
     monkeypatch.setenv("SPARK_GRAFT_DML_DISTRIBUTED", "0")
     sf = _mk_sf(tmp_path, monkeypatch, tables=("lineitem",))
     out = sess.ingest_tables(spark, sf, parts=4, min_rows_to_split=1000)
+    first_read(sf, "lineitem.bucketed.parquet")
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     key = li.column("l_orderkey").to_pylist()[0]
     n_want = li.filter(pc.field("l_orderkey") == key).num_rows
